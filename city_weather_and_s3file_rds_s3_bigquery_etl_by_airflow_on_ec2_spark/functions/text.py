@@ -113,11 +113,12 @@ def rolling_hash_prenormalized(text: Column | str,
                                mod: int = 1_000_000_007,
                                base: int = 31) -> Column:
     """``rolling_hash`` minus its normalization pass, for inputs that
-    are whitespace-normalized BY CONSTRUCTION — tokens produced by
-    split-on-``\\s+`` of trimmed text (whitespace-free, non-empty
-    except the empty-document ``""`` edge, which hashes to 0 on both
-    paths) and grams joining such tokens with single spaces.  On those
-    inputs trim + ``regexp_replace(\\s+, ' ')`` are identities, so the
+    are already whitespace-normalized: no whitespace at either end and
+    no run of it inside.  Tokens from :func:`tokens` qualify (the empty
+    one hashes to 0 on both paths).  Two tokens joined with ' ' qualify
+    only once trimmed: ``F.trim`` strips spaces only, so text starting
+    or ending with \\t, \\n or \\r leaves an empty boundary token and
+    the joined bigram reads ' foo' / 'foo '.  On qualifying inputs the
     values are bit-identical to :func:`rolling_hash` while skipping a
     regex per hashed string on the hot explode paths (r13, guide
     §2.3).  Callers own the normalization proof; arbitrary text must

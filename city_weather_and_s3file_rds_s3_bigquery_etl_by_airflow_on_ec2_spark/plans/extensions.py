@@ -2318,23 +2318,22 @@ def corpus_dsir_weights(spark: SparkSession, sf_dir: str,
     bi_pairs = F.arrays_zip(
         F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))).alias("w1"),
         F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))).alias("w2"))
+    # bigrams are trimmed: ``F.trim`` strips spaces only, so text that
+    # starts or ends with \t, \n or \r splits into an empty boundary
+    # token, and its boundary bigram would be ' foo' / 'foo '
     grams = F.concat(
         toks,
         F.transform(bi_pairs,
-                    lambda p: F.concat_ws(" ", p["w1"], p["w2"])))
+                    lambda p: F.trim(F.concat_ws(" ", p["w1"], p["w2"]))))
     # LEAN per-gram rolling hash (r13, guide §2.3 — strip no-op work
     # from the hot loop): ``TX.rolling_hash`` first normalizes its
-    # input (trim + regexp_replace(\s+, ' ')), but every gram here is
-    # whitespace-normalized BY CONSTRUCTION — tokens come from
-    # split-on-\s+ of trimmed text (whitespace-free, non-empty except
-    # the empty-document [""] edge, which hashes to 0 on both paths),
-    # and bigram grams join two such tokens with exactly one ' '.  So
-    # the per-gram trim and regex were 2×grams pure overhead on the
-    # operator's dominant stage.  Same split, same codepoints, same
-    # h ← (h·31 + c) mod p fold — bit-identical hashes, re-verified by
-    # the DuckDB oracle (which replays the ORIGINAL normalized
-    # definition in SQL).  Census first-materialization measured
-    # 1.72–2.0 s → 1.33 s at sf0.1.
+    # input (trim + regexp_replace(\s+, ' ')).  Tokens hold no
+    # whitespace (the empty one hashes to 0 on both paths) and a
+    # trimmed bigram holds at most one inner ' ', so that pass is an
+    # identity on every gram here: bit-identical to ``rolling_hash`` at
+    # one trim per bigram instead of a trim and a regex per gram (the
+    # DuckDB oracle trims its bigrams the same way).  Census
+    # first-materialization measured 1.72–2.0 s → 1.33 s at sf0.1.
     #
     # (Two rejected variants, measured: a per-token (h, 31^len)
     # composition that computes each bigram hash in O(1) — the struct

@@ -6,8 +6,17 @@ load_csv} >> join >> save_s3 >> load_bq >> end` becomes: probe →
 http_json_source → flatten/convert → broadcast join with the lookup →
 quality gates → three sinks (single-object CSV = the S3 artifact,
 parquet warehouse = the BigQuery stand-in, optional JDBC). The
-XCom/task boundaries disappear into lazy DataFrame lineage; the two
+XCom/task boundaries disappear into DataFrame lineage; the two
 "parallel loads" are just two independent subtrees of one plan.
+
+Fetch once, materialize once: like the reference, which fetches each
+city once per run and loads that one payload everywhere, a run calls
+the weather API once per URL (plus the probe) — ``http_json_source``
+fetches at call time — and computes the joined day once
+(``localCheckpoint(eager=True)``).  The quality gates, the row count,
+the CSV and the warehouse append all read those checkpointed rows, so
+they cannot disagree with each other, and ``PipelineResult.final_df``
+is that same frame.
 
 Idempotency (O7): the warehouse sink uses ``merge_append`` on the
 natural key (city, time_of_record), so re-running a day — the
@@ -62,7 +71,9 @@ def run_weather_pipeline(
     weather = flatten_weather(raw)
     lookup = lookup_df if lookup_df is not None else city_lookup(spark)
 
-    final = join_weather_lookup(weather, lookup)
+    # every consumer below reads this one materialization; without it
+    # each action re-plans the lookup scan and the broadcast join
+    final = join_weather_lookup(weather, lookup).localCheckpoint(eager=True)
     expect_nonempty(final, "joined weather data")
     expect_no_nulls(final, ["city", "time_of_record"])
 

@@ -3700,7 +3700,7 @@ REGISTRY: dict[str, QuerySpec] = {
             SELECT doc_id, is_tgt,
                    unnest(list_concat(toks,
                        list_transform(range(1, len(toks)),
-                                      i -> toks[i] || ' ' || toks[i+1])))
+                                      i -> trim(toks[i] || ' ' || toks[i+1]))))
                        AS gram
             FROM tk
         ), feat AS (

@@ -12,7 +12,9 @@ Spark has no built-in HTTP source, so the engine provides:
   fetch fans out across executors via ``mapInPandas`` (each Arrow
   batch of URLs is fetched inside the partition), which is the scale
   path: ingest parallelism == partition count, rate limiting stays
-  per-executor.
+  per-executor.  Either way each URL is fetched exactly once, when
+  ``http_json_source`` is called; later actions on the result read the
+  fetched rows and never call the fetcher again.
 
 Every function takes an injectable ``fetcher`` so tests (and offline
 runs) never touch the network; the default uses stdlib urllib.
@@ -73,23 +75,38 @@ def http_json_source(
     explicit schema (no inference — SURVEY.md §1.2).
 
     ≤ ``distributed_threshold`` urls: driver-side fetch (the reference
-    shape, one city per run). Above it: the url list becomes a
-    DataFrame and fetching runs inside ``mapInPandas`` partitions —
-    executor-parallel ingest with no driver bottleneck."""
+    shape, one city per run). Above it: fetching runs inside
+    ``mapInPandas`` partitions, each a range of url indices —
+    executor-parallel ingest with no driver bottleneck.
+
+    Fetch-once contract: both paths fetch every URL exactly once, at
+    call time.  The executor path parses the bodies and
+    ``localCheckpoint(eager=True)``s the result, so the returned frame
+    reads checkpointed blocks: every later action (quality gates,
+    counts, each sink) sees the same payloads, and a live API is not
+    asked again per action.  The price is lineage: if an executor
+    holding checkpoint blocks is lost, a later action fails instead of
+    silently re-fetching — the right failure for a source that is not
+    idempotent (a re-fetch could return a different payload than the
+    rows already written)."""
     f = fetcher or _default_fetcher
     if len(urls) <= distributed_threshold:
         docs = [f(u) for u in urls]
         return spark.createDataFrame(docs, schema=schema)
 
-    url_df = spark.createDataFrame([(u,) for u in urls], ["url"]) \
-                  .repartition(num_partitions or min(len(urls) // 8 + 1, 256))
+    # the partitions are index ranges into ``urls`` (shipped with the
+    # task), so spreading the fetch needs no shuffle
+    idx = spark.range(len(urls), numPartitions=num_partitions
+                      or min(len(urls) // 8 + 1, 256))
     out_schema = T.StructType([T.StructField("body", T.StringType())])
 
     def fetch_batch(batches: Iterator) -> Iterator:
         import pandas as pd
         for pdf in batches:
-            yield pd.DataFrame({"body": [json.dumps(f(u)) for u in pdf["url"]]})
+            yield pd.DataFrame(
+                {"body": [json.dumps(f(urls[i])) for i in pdf["id"]]})
 
-    bodies = url_df.mapInPandas(fetch_batch, out_schema)
-    return bodies.select(
-        F.from_json(F.col("body"), schema).alias("doc")).select("doc.*")
+    bodies = idx.mapInPandas(fetch_batch, out_schema)
+    return (bodies.select(F.from_json(F.col("body"), schema).alias("doc"))
+            .select("doc.*")
+            .localCheckpoint(eager=True))

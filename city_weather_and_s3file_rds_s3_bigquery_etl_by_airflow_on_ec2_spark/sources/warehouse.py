@@ -37,9 +37,17 @@ def append(df: DataFrame, path: str, align_to_existing: bool = True,
     BigQuery load-job behavior the reference relies on — its DDL order
     differs from its DataFrame order)."""
     spark = df.sparkSession
-    if align_to_existing and table_exists(spark, path):
-        existing = spark.read.parquet(path).schema
-        df = df.select(*[F.col(f.name) for f in existing.fields])
+    existing = (spark.read.parquet(path)
+                if align_to_existing and table_exists(spark, path) else None)
+    _append_aligned(df, path, existing, partition_by)
+
+
+def _append_aligned(df: DataFrame, path: str, existing: DataFrame | None,
+                    partition_by: list[str] | None) -> None:
+    """Append ``df`` with its columns selected by name in the order of
+    ``existing`` (the table as already read), or as is when None."""
+    if existing is not None:
+        df = df.select(*[F.col(f.name) for f in existing.schema.fields])
     w = df.write.mode("append")
     if partition_by:
         w = w.partitionBy(*partition_by)
@@ -50,7 +58,14 @@ def merge_append(df: DataFrame, path: str, key_cols: list[str],
                  partition_by: list[str] | None = None) -> int:
     """Idempotent append: drop incoming rows whose key already exists
     (left-anti join against the current table), then append. Returns
-    the number of rows actually written.
+    the number of rows actually written; a replay writes 0 rows and
+    adds no file.
+
+    The existing table is read once (each parquet read pays a
+    schema-inference job): that one read gives both the keys for the
+    anti-join and the column order for the name-based append.  The
+    surviving rows are materialized once, so the count and the append
+    read the same rows and the anti-join is not planned twice.
 
     Scale note: the anti-join shuffles only the key columns of the
     existing table; with a partitioned warehouse the read prunes to
@@ -58,12 +73,14 @@ def merge_append(df: DataFrame, path: str, key_cols: list[str],
     becomes a real MERGE INTO; parquet posture keeps the same API.)"""
     spark = df.sparkSession
     incoming = df.dropDuplicates(key_cols)
-    if table_exists(spark, path):
-        existing_keys = spark.read.parquet(path).select(*key_cols)
-        incoming = incoming.join(existing_keys, on=key_cols, how="left_anti")
+    existing = spark.read.parquet(path) if table_exists(spark, path) else None
+    if existing is not None:
+        incoming = incoming.join(existing.select(*key_cols), on=key_cols,
+                                 how="left_anti")
+    incoming = incoming.localCheckpoint(eager=True)
     n = incoming.count()
     if n:
-        append(incoming, path, partition_by=partition_by)
+        _append_aligned(incoming, path, existing, partition_by)
     return n
 
 

@@ -1,8 +1,11 @@
 from __future__ import annotations
 
+import glob
+import os
 import sys
 from dataclasses import dataclass
 from pathlib import Path
+from urllib.parse import parse_qs, urlsplit
 
 import pytest
 
@@ -10,6 +13,9 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark import (  # noqa: E402
     get_spark,
+)
+from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.plans.reference_pipeline import (  # noqa: E402
+    GOLDEN_OWM_PAYLOAD,
 )
 
 SF_SMALL = "/root/testdata/sf0.001"
@@ -71,3 +77,32 @@ def registry_sweep(spark) -> dict[str, SweepRecord]:
         )
     release_persisted()
     return out
+
+
+class CountingFetcher:
+    """An offline weather API that counts its calls.  It answers every
+    URL with ``GOLDEN_OWM_PAYLOAD``, renamed to the URL's ``city`` query
+    parameter when there is one.  The executor-side fetch calls it in
+    Spark's Python workers, so each call appends one line to a
+    per-process file under ``count_dir`` and :attr:`calls` sums them
+    (the pattern of ``perfbench/etl.Fetcher``)."""
+
+    def __init__(self, count_dir) -> None:
+        self.count_dir = str(count_dir)
+        os.makedirs(self.count_dir, exist_ok=True)
+
+    def __call__(self, url: str) -> dict:
+        path = os.path.join(self.count_dir, f"fetch-{os.getpid()}.log")
+        with open(path, "a") as f:
+            f.write(url + "\n")
+        city = parse_qs(urlsplit(url).query).get("city")
+        return {**GOLDEN_OWM_PAYLOAD, "name": city[0]} if city \
+            else GOLDEN_OWM_PAYLOAD
+
+    @property
+    def calls(self) -> int:
+        n = 0
+        for path in glob.glob(os.path.join(self.count_dir, "fetch-*.log")):
+            with open(path) as f:
+                n += sum(1 for _ in f)
+        return n

@@ -3036,31 +3036,29 @@ def test_bpe_merge_step_pair_is_corpus_argmax(spark):
     assert (row["pair_a"], row["pair_b"]) == best
 
 
-def test_dsir_weights_match_python_reference(spark):
-    """corpus_dsir_weights equals a from-scratch pure-Python DSIR
-    implementation (hashed unigram+bigram features, add-one smoothing,
-    the shared rolling hash) on every document."""
+def _dsir_reference(docs) -> dict:
+    """From-scratch pure-Python DSIR: doc_id -> (n_grams, log_weight)
+    over hashed unigram+bigram features with add-one smoothing and the
+    shared rolling hash.  Tokens follow ``functions.text.tokens``:
+    space-only trim, then a split on Java's ``\\s`` class, so text that
+    starts or ends with a tab or newline keeps an empty boundary token
+    (in the quality score too)."""
     import math
     import re
-
-    from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.plans.extensions import (
-        corpus_dsir_weights,
-    )
-    got = {r["doc_id"]: r for r in
-           corpus_dsir_weights(spark, SF_SMALL).collect()}
-    docs = read_parquet_table(spark, SF_SMALL, "documents") \
-        .select("doc_id", "text").collect()
 
     STOP = {"the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
             "that", "for", "on", "with", "as", "at", "by", "this", "be",
             "are"}
 
+    def split(text):
+        return re.split(r"[ \t\n\x0b\f\r]+", text.strip(" "))
+
     def toks(text):
-        return [t.lower() for t in re.split(r"\s+", text.strip())]
+        return [t.lower() for t in split(text)]
 
     def quality(text):
-        tk = toks(text)
-        stop = sum(1 for t in tk if t in STOP) / len(tk)
+        tk = split(text)
+        stop = sum(1 for t in tk if t.lower() in STOP) / len(tk)
         punct = len(re.sub(r"[A-Za-z0-9\s]", "", text)) / len(text)
         return round(0.5 * min(stop * 4.0, 1.0)
                      + 0.3 * min(len(tk) / 50.0, 1.0)
@@ -3075,15 +3073,15 @@ def test_dsir_weights_match_python_reference(spark):
     raw = [0] * 64
     tgt = [0] * 64
     per_doc = {}
-    for r in docs:
-        tk = toks(r["text"])
+    for doc_id, text in docs:
+        tk = toks(text)
         grams = tk + [f"{x} {y}" for x, y in zip(tk, tk[1:])]
         counts = {}
         for g in grams:
             bkt = rhash(g) % 64
             counts[bkt] = counts.get(bkt, 0) + 1
-        per_doc[r["doc_id"]] = counts
-        is_t = quality(r["text"]) >= 0.6
+        per_doc[doc_id] = counts
+        is_t = quality(text) >= 0.6
         for bkt, c in counts.items():
             raw[bkt] += c
             if is_t:
@@ -3091,10 +3089,70 @@ def test_dsir_weights_match_python_reference(spark):
     R, T = sum(raw), sum(tgt)
     lam = [math.log((tgt[b] + 1) / (T + 64))
            - math.log((raw[b] + 1) / (R + 64)) for b in range(64)]
-    for doc_id, counts in per_doc.items():
-        w = sum(c * lam[b] for b, c in counts.items())
-        assert got[doc_id]["n_grams"] == sum(counts.values())
+    return {doc_id: (sum(counts.values()),
+                     sum(c * lam[b] for b, c in counts.items()))
+            for doc_id, counts in per_doc.items()}
+
+
+def test_dsir_weights_match_python_reference(spark):
+    """corpus_dsir_weights equals a from-scratch pure-Python DSIR
+    implementation (hashed unigram+bigram features, add-one smoothing,
+    the shared rolling hash) on every document."""
+    from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.plans.extensions import (
+        corpus_dsir_weights,
+    )
+    got = {r["doc_id"]: r for r in
+           corpus_dsir_weights(spark, SF_SMALL).collect()}
+    docs = read_parquet_table(spark, SF_SMALL, "documents") \
+        .select("doc_id", "text").collect()
+    for doc_id, (n, w) in _dsir_reference(docs).items():
+        assert got[doc_id]["n_grams"] == n
         assert got[doc_id]["log_weight"] == pytest.approx(w, abs=1e-4)
+
+
+def test_dsir_weights_tab_newline_edges(spark, tmp_path):
+    """Text that starts or ends with a tab, newline or carriage return
+    keeps an empty boundary token (``F.trim`` strips spaces only), so
+    its boundary bigrams are built as ' foo' / 'foo '.  Every gram must
+    still hash like ``rolling_hash`` (which trims them), and the
+    operator must match both the Python reference and its DuckDB oracle
+    on such a planted corpus."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entrymod
+    from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.plans.extensions import (
+        corpus_dsir_weights,
+    )
+
+    texts = ["\tthe spark join is fast", "the table scan is slow\n",
+             "\r\nmerge the window\t", "\n\t", "plain words of the batch",
+             " \tspace then tab and the end \n", "row\tinner\ntabs stay",
+             "\fform feed lead and the end\f",
+             "the data of the query is in the table", "x"]
+    # no \x0b edge: Java's \s has it, DuckDB's RE2 \s does not, so every
+    # token oracle splits it differently — a tokenizer matter, not a hash one
+    docs = list(enumerate(texts))
+    pq.write_table(pa.table({
+        "doc_id": pa.array([d for d, _ in docs], pa.int64()),
+        "text": pa.array([t for _, t in docs], pa.string())}),
+        str(tmp_path / "documents.parquet"))
+
+    got = {r["doc_id"]: (r["n_grams"], r["log_weight"])
+           for r in corpus_dsir_weights(spark, str(tmp_path)).collect()}
+    want = _dsir_reference(docs)
+    assert set(got) == set(want)
+    for doc_id, (n, w) in want.items():
+        assert got[doc_id][0] == n, doc_id
+        assert got[doc_id][1] == pytest.approx(w, abs=1e-6), doc_id
+
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"'{tmp_path}/documents.parquet'")
+    oracle = {r[0]: (r[1], r[2]) for r in con.execute(
+        entrymod.oracle_sql()["corpus_dsir_weights"]).fetchall()}
+    assert oracle == got
 
 
 def test_ppl_buckets_are_balanced_and_ordered(spark):

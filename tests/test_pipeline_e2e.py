@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import glob
+
 import pytest
 
 from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.operators.quality import (
@@ -14,8 +16,11 @@ from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.plans.p
     run_weather_pipeline,
 )
 from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.plans.reference_pipeline import (
+    CITY_LOOKUP_SCHEMA,
     GOLDEN_OWM_PAYLOAD,
 )
+
+from .conftest import CountingFetcher
 
 
 def fetcher(url: str) -> dict:
@@ -47,6 +52,45 @@ def test_pipeline_end_to_end(spark, tmp_path):
     assert spark.read.parquet(
         f"{tmp_path}/warehouse/final_weather_data").count() == 2
     assert res3.rows_joined == 1
+
+
+def test_pipeline_executor_path_fetches_once(spark, tmp_path):
+    """80 URLs (above the 64-URL driver threshold) take the executor-side
+    fetch.  A day calls the API once per URL plus the probe, and the
+    row count, the CSV and the warehouse all come from that one fetch;
+    a replay fetches again but writes nothing."""
+    cities = [f"City{i:02d}" for i in range(80)]
+    covered = cities[::3]
+    lookup = spark.createDataFrame(
+        [(c, "Texas", 1000 + i, 1.5) for i, c in enumerate(covered)],
+        CITY_LOOKUP_SCHEMA)
+    urls = [f"http://api/weather?city={c}" for c in cities]
+    fetcher = CountingFetcher(tmp_path / "calls")
+    out = str(tmp_path / "out")
+
+    res = run_weather_pipeline(spark, urls, out, fetcher=fetcher,
+                               lookup_df=lookup)
+    assert fetcher.calls == 80 + 1
+    assert res.rows_joined == len(covered)
+    assert res.warehouse_rows_written == len(covered)
+    wh_path = f"{out}/warehouse/final_weather_data"
+    wh = spark.read.parquet(wh_path)
+    wh_files = glob.glob(f"{wh_path}/*.parquet")
+    csv_rows = spark.read.schema(wh.schema).option("header", True) \
+        .csv(res.csv_path).collect()
+    wh_rows = wh.collect()
+    assert len(csv_rows) == len(covered)
+    assert sorted(csv_rows) == sorted(wh_rows)
+    assert sorted(res.final_df.collect()) == sorted(wh_rows)
+    assert {r.city for r in wh_rows} == set(covered)
+
+    replay = run_weather_pipeline(spark, urls, out, fetcher=fetcher,
+                                  lookup_df=lookup)
+    assert fetcher.calls == 2 * (80 + 1)
+    assert replay.rows_joined == len(covered)
+    assert replay.warehouse_rows_written == 0
+    assert glob.glob(f"{wh_path}/*.parquet") == wh_files
+    assert spark.read.parquet(wh_path).count() == len(covered)
 
 
 def test_pipeline_sensor_failure(spark, tmp_path):

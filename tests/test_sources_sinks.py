@@ -31,6 +31,8 @@ from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.sources
     jdbc_table_reader,
 )
 
+from .conftest import CountingFetcher
+
 
 def fake_fetcher(url: str) -> dict:
     if "fail" in url:
@@ -46,12 +48,17 @@ def test_http_source_driver_path(spark):
     assert flat[0].temperature_fahrenheit == 55.148
 
 
-def test_http_source_distributed_path(spark):
+def test_http_source_distributed_path(spark, tmp_path):
+    """The executor-side path fetches each URL once, at call time: later
+    actions read the fetched rows and never call the fetcher again."""
+    fetcher = CountingFetcher(tmp_path / "calls")
     urls = [f"http://x/weather?i={i}" for i in range(100)]
-    df = http_json_source(spark, urls, OWM_SCHEMA, fetcher=fake_fetcher,
+    df = http_json_source(spark, urls, OWM_SCHEMA, fetcher=fetcher,
                           distributed_threshold=10)
     assert df.count() == 100
     assert df.select("name").distinct().collect()[0].name == "Houston"
+    assert df.where(F.col("main.pressure") == 1024).count() == 100
+    assert fetcher.calls == 100
 
 
 def test_probe_retry_and_failure():
