@@ -56,13 +56,10 @@ def run_weather_pipeline(
     out_dir: str,
     fetcher: Fetcher | None = None,
     lookup_df: DataFrame | None = None,
-    write_csv: bool = True,
-    idempotent: bool = True,
 ) -> PipelineResult:
     """Execute the full reference dataflow; returns handles + counts.
 
-    ``fetcher`` is injectable (tests run offline); ``idempotent=False``
-    reproduces the reference-faithful blind append for comparison."""
+    ``fetcher`` is injectable (tests run offline)."""
     if api_urls and not probe(api_urls[0], retries=3, delay_s=0.0,
                               fetcher=fetcher):
         raise RuntimeError("weather API unavailable (sensor failed)")
@@ -78,16 +75,9 @@ def run_weather_pipeline(
     expect_no_nulls(final, ["city", "time_of_record"])
 
     rows = final.count()
-    csv_path = None
-    if write_csv:
-        csv_path = write_single_csv(final, f"{out_dir}/final_weather_data.csv")
-
-    wh_path = f"{out_dir}/warehouse/final_weather_data"
-    if idempotent:
-        written = warehouse.merge_append(
-            final, wh_path, key_cols=["city", "time_of_record"])
-    else:
-        warehouse.append(final, wh_path)
-        written = rows
+    csv_path = write_single_csv(final, f"{out_dir}/final_weather_data.csv")
+    written = warehouse.merge_append(
+        final, f"{out_dir}/warehouse/final_weather_data",
+        key_cols=["city", "time_of_record"])
     return PipelineResult(final_df=final, rows_joined=rows,
                           csv_path=csv_path, warehouse_rows_written=written)

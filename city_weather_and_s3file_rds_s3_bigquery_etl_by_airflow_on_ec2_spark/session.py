@@ -6,7 +6,8 @@ pushdown, column pruning, broadcast selection, AQE skew handling and
 whole-stage codegen; we pin the handful of settings that reference
 parity and 100 TB scale need.
 
-Scale notes (local[32] here, 1000-executor cluster in production):
+Scale notes (local[<host cores>] here, 1000-executor cluster in
+production):
 - ``spark.sql.shuffle.partitions`` — sized to cores locally; on a real
   cluster AQE coalesces post-shuffle partitions anyway, so a generous
   static value plus AQE is the right posture.
@@ -24,7 +25,6 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CONFS: dict[str, str] = {
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -82,11 +82,14 @@ def get_spark(app_name: str = "cw_spark_engine", master: str | None = None,
               extra_confs: dict[str, str] | None = None) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    so bench/tests saturate the container; on a cluster the caller
-    passes nothing and spark-submit's master wins.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` and
+    ``spark.sql.shuffle.partitions`` to the same count; unset, the
+    count is the CPUs this process may run on, so bench/tests saturate
+    the host they run on.  On a cluster the caller passes nothing and
+    spark-submit's master wins.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = (os.environ.get("SPARK_GRAFT_CPUS")
+            or str(len(os.sched_getaffinity(0))))
     builder = SparkSession.builder.appName(app_name)
     builder = builder.master(master or f"local[{cpus}]")
     # local mode runs driver+executors in ONE JVM whose default heap is
@@ -95,7 +98,9 @@ def get_spark(app_name: str = "cw_spark_engine", master: str | None = None,
     # real cluster spark-submit's --driver-memory/--executor-memory win.
     builder = builder.config(
         "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-    for k, v in {**DEFAULT_CONFS, **(extra_confs or {})}.items():
+    confs = {**DEFAULT_CONFS, "spark.sql.shuffle.partitions": cpus,
+             **(extra_confs or {})}
+    for k, v in confs.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -6,11 +6,10 @@ Spark has no built-in HTTP source, so the engine provides:
 
 - ``probe`` — bounded-retry availability check (the sensor, O4's retry
   policy folded in), stdlib urllib only;
-- ``fetch_json`` — one GET → parsed JSON document;
-- ``http_json_source`` — N endpoints → DataFrame. For a handful of
-  endpoints the driver fetches serially; for a large endpoint list the
-  fetch fans out across executors via ``mapInPandas`` (each Arrow
-  batch of URLs is fetched inside the partition), which is the scale
+- ``http_json_source`` — N endpoints → DataFrame. Up to
+  ``DRIVER_FETCH_MAX_URLS`` endpoints the driver fetches serially;
+  above it the fetch fans out across executors via ``mapInPandas``
+  (each Arrow batch of URLs is fetched inside the partition), the scale
   path: ingest parallelism == partition count, rate limiting stays
   per-executor.  Either way each URL is fetched exactly once, when
   ``http_json_source`` is called; later actions on the result read the
@@ -33,6 +32,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 Fetcher = Callable[[str], dict]
+
+# above this many URLs the fetch fans out across executors
+DRIVER_FETCH_MAX_URLS = 64
 
 
 def _default_fetcher(url: str, timeout_s: float = 10.0) -> dict:
@@ -58,23 +60,16 @@ def probe(url: str, retries: int = 3, delay_s: float = 3.0,
     return False
 
 
-def fetch_json(url: str, fetcher: Fetcher | None = None) -> dict:
-    """S1 — GET + JSON decode (F5)."""
-    return (fetcher or _default_fetcher)(url)
-
-
 def http_json_source(
     spark: SparkSession,
     urls: list[str],
     schema: T.StructType,
     fetcher: Fetcher | None = None,
-    distributed_threshold: int = 64,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Materialize JSON documents from ``urls`` as a DataFrame with an
     explicit schema (no inference — SURVEY.md §1.2).
 
-    ≤ ``distributed_threshold`` urls: driver-side fetch (the reference
+    ≤ ``DRIVER_FETCH_MAX_URLS`` urls: driver-side fetch (the reference
     shape, one city per run). Above it: fetching runs inside
     ``mapInPandas`` partitions, each a range of url indices —
     executor-parallel ingest with no driver bottleneck.
@@ -90,14 +85,13 @@ def http_json_source(
     idempotent (a re-fetch could return a different payload than the
     rows already written)."""
     f = fetcher or _default_fetcher
-    if len(urls) <= distributed_threshold:
+    if len(urls) <= DRIVER_FETCH_MAX_URLS:
         docs = [f(u) for u in urls]
         return spark.createDataFrame(docs, schema=schema)
 
     # the partitions are index ranges into ``urls`` (shipped with the
     # task), so spreading the fetch needs no shuffle
-    idx = spark.range(len(urls), numPartitions=num_partitions
-                      or min(len(urls) // 8 + 1, 256))
+    idx = spark.range(len(urls), numPartitions=min(len(urls) // 8 + 1, 256))
     out_schema = T.StructType([T.StructField("body", T.StringType())])
 
     def fetch_batch(batches: Iterator) -> Iterator:

@@ -30,15 +30,14 @@ def table_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(jpath))
 
 
-def append(df: DataFrame, path: str, align_to_existing: bool = True,
+def append(df: DataFrame, path: str,
            partition_by: list[str] | None = None) -> None:
     """K4 append semantics with *name-based* column matching: if the
     warehouse table exists, reorder/select columns by name (the
     BigQuery load-job behavior the reference relies on — its DDL order
     differs from its DataFrame order)."""
     spark = df.sparkSession
-    existing = (spark.read.parquet(path)
-                if align_to_existing and table_exists(spark, path) else None)
+    existing = spark.read.parquet(path) if table_exists(spark, path) else None
     _append_aligned(df, path, existing, partition_by)
 
 

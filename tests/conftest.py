@@ -33,8 +33,9 @@ def spark():
     # SHAPES, oracle parity — exchange counts and operator choices do
     # not depend on the partition number).  bench.py and the driver
     # contract still run `spark.sql.shuffle.partitions` =
-    # $SPARK_GRAFT_CPUS via session.DEFAULT_CONFS — this is test
-    # infrastructure, not a bench configuration.
+    # $SPARK_GRAFT_CPUS (else the host's CPU count) via
+    # session.get_spark — this is test infrastructure, not a bench
+    # configuration.
     s = get_spark("tests", extra_confs={"spark.sql.shuffle.partitions": "8"})
     yield s
 

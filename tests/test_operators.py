@@ -527,40 +527,6 @@ def test_udtf_tokenize_with_offsets(spark):
     assert {(r.i, r.token, r.pos) for r in out} == {(1, "a", 0), (1, "bb", 1)}
 
 
-def test_scd2_merge_fold(spark):
-    import datetime
-
-    from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.operators.scd import (
-        scd2_apply,
-        scd2_init,
-    )
-
-    t0, t1 = datetime.datetime(2026, 1, 1), datetime.datetime(2026, 2, 1)
-    snap = spark.createDataFrame(
-        [(1, "Houston", "TX"), (2, "Chicago", "IL")],
-        ["city_id", "name", "state"])
-    hist = scd2_init(snap, t0)
-
-    updates = spark.createDataFrame(
-        [(1, "Houston", "Texas"),     # changed tracked attribute
-         (2, "Chicago", "IL"),        # unchanged → no-op
-         (3, "Seattle", "WA")],       # brand-new key
-        ["city_id", "name", "state"])
-    hist2 = scd2_apply(hist, updates, ["city_id"], ["name", "state"], t1)
-
-    rows = {(r.city_id, r.state, r.is_current, r.valid_to)
-            for r in hist2.collect()}
-    assert (1, "TX", False, t1) in rows          # closed old version
-    assert (1, "Texas", True, None) in rows      # new open version
-    assert (2, "IL", True, None) in rows         # untouched
-    assert (3, "WA", True, None) in rows         # inserted
-    assert hist2.count() == 4
-
-    # idempotent replay of the same batch
-    hist3 = scd2_apply(hist2, updates, ["city_id"], ["name", "state"], t1)
-    assert hist3.count() == 4
-
-
 def test_asof_join_rejects_payload_collision(spark):
     """A payload column sharing a name with a left column would emit
     duplicate output columns — rejected up front (ADVICE r1)."""
@@ -2126,39 +2092,6 @@ def test_pq_adc_recall_vs_brute_force(spark):
     assert set(approx) == set(exact)
     recalls = [len(approx[q] & exact[q]) / len(exact[q]) for q in exact]
     assert sum(recalls) / len(recalls) >= 0.5, recalls
-
-
-def test_transform_with_state_v2_matches_batch_or_skips(spark):
-    """transformWithStateInPandas (v2 stateful API): final per-user
-    totals equal the batch aggregate — executed where protobuf
-    exists; self-skips (documented container-blocked, like the
-    BigQuery connector) otherwise, while the probe result is still
-    asserted to be the KNOWN dependency, not an arbitrary failure."""
-    import pytest as _pytest
-
-    from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.streaming.stateful_v2 import (
-        probe_transform_with_state,
-        running_user_totals_stream_v2,
-    )
-
-    reason = probe_transform_with_state()
-    if reason is not None:
-        assert "protobuf" in reason
-        _pytest.skip(f"transformWithState blocked here: {reason}")
-    from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.sources.tables import (
-        read_parquet_table,
-    )
-
-    from .conftest import SF_SMALL
-
-    got = {r.user_id: (r.n_events, r.total_value)
-           for r in running_user_totals_stream_v2(spark, SF_SMALL).collect()}
-    ev = read_parquet_table(spark, SF_SMALL, "events")
-    want = {r.user_id: (r.n, r.t) for r in
-            ev.groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.round(F.sum("value"), 2).alias("t")).collect()}
-    assert got == want
 
 
 def test_multimodal_phash_planted_duplicates(spark, tmp_path):

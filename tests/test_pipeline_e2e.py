@@ -19,6 +19,9 @@ from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.plans.r
     CITY_LOOKUP_SCHEMA,
     GOLDEN_OWM_PAYLOAD,
 )
+from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.sources import (
+    warehouse,
+)
 
 from .conftest import CountingFetcher
 
@@ -45,13 +48,10 @@ def test_pipeline_end_to_end(spark, tmp_path):
     wh = spark.read.parquet(f"{tmp_path}/warehouse/final_weather_data")
     assert wh.count() == 1
 
-    # reference-faithful append mode duplicates, as documented
-    res3 = run_weather_pipeline(
-        spark, ["http://api/weather?q=houston"], str(tmp_path),
-        fetcher=fetcher, idempotent=False, write_csv=False)
+    # the reference-faithful blind append duplicates, as documented
+    warehouse.append(res2.final_df, f"{tmp_path}/warehouse/final_weather_data")
     assert spark.read.parquet(
         f"{tmp_path}/warehouse/final_weather_data").count() == 2
-    assert res3.rows_joined == 1
 
 
 def test_pipeline_executor_path_fetches_once(spark, tmp_path):

@@ -21,7 +21,6 @@ from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.sources
     write_single_csv,
 )
 from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.sources.http import (
-    fetch_json,
     http_json_source,
     probe,
 )
@@ -53,8 +52,7 @@ def test_http_source_distributed_path(spark, tmp_path):
     actions read the fetched rows and never call the fetcher again."""
     fetcher = CountingFetcher(tmp_path / "calls")
     urls = [f"http://x/weather?i={i}" for i in range(100)]
-    df = http_json_source(spark, urls, OWM_SCHEMA, fetcher=fetcher,
-                          distributed_threshold=10)
+    df = http_json_source(spark, urls, OWM_SCHEMA, fetcher=fetcher)
     assert df.count() == 100
     assert df.select("name").distinct().collect()[0].name == "Houston"
     assert df.where(F.col("main.pressure") == 1024).count() == 100
@@ -74,7 +72,6 @@ def test_probe_retry_and_failure():
     assert len(calls) == 3
     assert not probe("http://fail", retries=1, delay_s=0.0,
                      fetcher=fake_fetcher)
-    assert fetch_json("http://ok", fetcher=fake_fetcher)["name"] == "Houston"
 
 
 def test_write_single_csv(spark, tmp_path):
@@ -119,27 +116,6 @@ def test_jdbc_option_assembly(spark):
     df = spark.createDataFrame([(1,)], ["id"])
     w = jdbc_append_writer(df, ep, "houston_weather_data", batchsize=500)
     assert w is not None
-
-
-def test_custom_http_datasource(spark):
-    """Spark 4 Python Data Source: one executor-side fetch per URL
-    partition (offline via fake_payload)."""
-    import json
-
-    from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.sources.http_datasource import (
-        OwmHttpDataSource,
-    )
-
-    spark.dataSource.register(OwmHttpDataSource)
-    urls = ",".join(f"http://api/weather?i={i}" for i in range(5))
-    df = (spark.read.format("owm_http")
-          .option("urls", urls)
-          .option("fake_payload", json.dumps(GOLDEN_OWM_PAYLOAD))
-          .load())
-    assert df.rdd.getNumPartitions() == 5
-    rows = df.collect()
-    assert len(rows) == 5
-    assert all(r.city == "Houston" and r.pressure == 1024 for r in rows)
 
 
 def test_table_exists_hadoop_fs(spark, tmp_path):
@@ -292,52 +268,6 @@ def test_streaming_jdbc_upsert_foreachbatch(spark, tmp_path):
         key=lambda r: r.id)
     assert [r.id for r in got] == list(range(8))
     assert got[3].temp == 273.0
-
-
-def test_custom_http_datasource_streaming_polls(spark, tmp_path):
-    """Streaming half of the Python Data Source: each microbatch polls
-    every endpoint once (offset = completed poll count), so 3 urls x
-    max_polls=4 settles at exactly 12 rows with the same flattened
-    schema as the batch reader — the reference's scheduled hourly
-    fetch as a real Structured Streaming source with checkpointed
-    offsets."""
-    import json
-    import time
-
-    from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.sources.http_datasource import (
-        HTTP_SOURCE_SCHEMA,
-        OwmHttpDataSource,
-    )
-
-    spark.dataSource.register(OwmHttpDataSource)
-    urls = ",".join(f"http://api/weather?i={i}" for i in range(3))
-    stream = (spark.readStream.format("owm_http")
-              .option("urls", urls)
-              .option("fake_payload", json.dumps(GOLDEN_OWM_PAYLOAD))
-              .option("max_polls", "4")
-              .load())
-    assert stream.isStreaming
-    assert stream.schema == HTTP_SOURCE_SCHEMA
-
-    q = (stream.writeStream.format("memory")
-         .queryName("owm_poll_sink")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(processingTime="0 seconds")
-         .start())
-    try:
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            q.processAllAvailable()
-            n = spark.sql("SELECT count(*) FROM owm_poll_sink").first()[0]
-            if n >= 12:
-                break
-            time.sleep(0.2)
-    finally:
-        q.stop()
-    rows = spark.sql("SELECT * FROM owm_poll_sink").collect()
-    # the offset stops advancing at max_polls: exactly 4 polls x 3 urls
-    assert len(rows) == 12
-    assert all(r.city == "Houston" and r.pressure == 1024 for r in rows)
 
 
 def test_schema_memo_reinfers_on_inplace_directory_rewrite(spark, tmp_path):

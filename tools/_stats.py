@@ -1,5 +1,5 @@
-"""Shared reducers for the bench/diagnostic tools (r5 review: the
-median/trimmed-mean helpers had drifted into four copies).
+"""Shared reducers for the bench tools (r5 review: the median helper
+had drifted into four copies).
 
 bench.py at the repo root stays self-contained by design — it is the
 driver-contract surface and must run with no sibling imports — so its
@@ -13,11 +13,3 @@ def median(xs: list[float]) -> float:
     xs = sorted(xs)
     m = len(xs) // 2
     return xs[m] if len(xs) % 2 else (xs[m - 1] + xs[m]) / 2
-
-
-def trimmed_mean(xs: list[float]) -> float:
-    """Drop min and max, average the rest; plain mean below n=3
-    (slicing to an empty list would silently report 0.0)."""
-    if len(xs) >= 3:
-        xs = sorted(xs)[1:-1]
-    return sum(xs) / len(xs)

@@ -100,8 +100,10 @@ def check(bench: dict, floors: dict[str, dict]) -> tuple[list[str], list[str]]:
                     "NOTE steal-flat is necessary but not sufficient for a "
                     "quiet host (BASELINE.md r9: memory-bandwidth "
                     "contention is steal-invisible) — re-run once and/or "
-                    "run tools/diag_cpu_variance.py to distinguish "
-                    "constant-work contention from a real plan change")
+                    "run `python3 perfbench/run.py --workload lake "
+                    "--trace 1` and compare its spark.tasks, spark.task_s "
+                    "and spark.task_skew to distinguish constant-work "
+                    "contention from a real plan change")
             else:
                 pending.append(
                     f"{q}: median {med:.3f}s > 2x floor {floor:.3f}s under "
