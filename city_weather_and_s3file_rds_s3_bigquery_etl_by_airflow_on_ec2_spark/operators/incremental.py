@@ -8,8 +8,9 @@ aggregate of (history ∪ delta) equals re-aggregating the two partial
 states.  So the pipeline keeps a compact keyed state table (one row
 per group) and each batch folds in only the delta — the same algebra
 Spark itself uses between partial and final aggregation, lifted to
-cross-job granularity (and the batch analog of the streaming rollup in
-streaming/rollup.py, which maintains the same shape under a watermark).
+cross-job granularity (the batch analog of a windowed streaming
+aggregate such as ``streaming.windows.run_tumbling_count_stream``,
+which keeps the same shape in state under a watermark).
 
 `merge_states` is pure relational algebra (union + one hash-agg on the
 group key, map-side partial combine), so compositions stay fully

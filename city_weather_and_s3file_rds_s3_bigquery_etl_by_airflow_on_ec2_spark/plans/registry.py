@@ -23,7 +23,22 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..streaming.dedup import (
+    run_dedup_stream,
+    run_dedup_within_watermark_stream,
+)
+from ..streaming.enrich import run_static_enrich_stream
+from ..streaming.joins import (
+    run_interval_join_stream,
+    run_interval_join_stream_outer,
+)
 from ..streaming.stateful import running_user_totals_stream
+from ..streaming.windows import (
+    run_offset_window_stream,
+    run_session_window_stream,
+    run_sliding_count_stream,
+    run_tumbling_count_stream,
+)
 from . import extensions as X
 from . import relational as R
 
@@ -912,7 +927,7 @@ REGISTRY: dict[str, QuerySpec] = {
         bench=True,
     ),
     "streaming_tumbling_hour": QuerySpec(
-        R.streaming_tumbling_hour,
+        run_tumbling_count_stream,
         """
         SELECT date_trunc('hour', ts) AS window_start, event_type,
                count(*) AS n_events, round(sum(value), 2) AS sum_value
@@ -921,7 +936,7 @@ REGISTRY: dict[str, QuerySpec] = {
         bench=True,
     ),
     "streaming_date_bin": QuerySpec(
-        R.streaming_date_bin,
+        run_offset_window_stream,
         """
         SELECT time_bucket(INTERVAL '15 minutes', ts,
                            TIMESTAMP '2023-12-31 23:05:00') AS bin_start,
@@ -971,7 +986,7 @@ REGISTRY: dict[str, QuerySpec] = {
         """,
     ),
     "streaming_session_windows": QuerySpec(
-        R.streaming_session_windows,
+        run_session_window_stream,
         """
         WITH flagged AS (
             SELECT user_id, ts,
@@ -2043,7 +2058,7 @@ REGISTRY: dict[str, QuerySpec] = {
         """,
     ),
     "streaming_interval_join": QuerySpec(
-        R.streaming_interval_join,
+        run_interval_join_stream,
         """
         SELECT c.event_id AS click_id, v.event_id AS view_id,
                c.user_id AS user_id,
@@ -2056,7 +2071,7 @@ REGISTRY: dict[str, QuerySpec] = {
         """,
     ),
     "streaming_interval_join_outer": QuerySpec(
-        R.streaming_interval_join_outer,
+        run_interval_join_stream_outer,
         """
         SELECT c.event_id AS click_id, v.event_id AS view_id,
                c.user_id AS user_id,
@@ -2322,11 +2337,11 @@ REGISTRY: dict[str, QuerySpec] = {
         """,
     ),
     "streaming_dedup_keys": QuerySpec(
-        R.streaming_dedup_keys,
+        run_dedup_stream,
         "SELECT DISTINCT user_id, event_type FROM events",
     ),
     "streaming_dedup_watermarked": QuerySpec(
-        R.streaming_dedup_watermarked,
+        run_dedup_within_watermark_stream,
         "SELECT DISTINCT user_id, event_type FROM events",
     ),
     # ------------------------- r5 SQL-surface growth (relational.py) ------
@@ -3150,7 +3165,7 @@ REGISTRY: dict[str, QuerySpec] = {
         """,
     ),
     "streaming_static_enrich": QuerySpec(
-        R.streaming_static_enrich,
+        run_static_enrich_stream,
         """
         WITH s AS (
             SELECT event_type, count(*) AS n,
@@ -3592,7 +3607,7 @@ REGISTRY: dict[str, QuerySpec] = {
         """,
     ),
     "streaming_sliding_window": QuerySpec(
-        R.streaming_sliding_window,
+        run_sliding_count_stream,
         """
         SELECT TIMESTAMP '1970-01-01'
                    + (CAST(floor(epoch(ts) / 900) AS BIGINT) * 900 - i.i * 900)

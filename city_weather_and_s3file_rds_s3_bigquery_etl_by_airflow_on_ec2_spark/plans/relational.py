@@ -23,12 +23,7 @@ from pyspark.sql import functions as F
 from ..operators.ids import serial_id
 from ..operators.joins import asof_join
 from ..sources.tables import load_tables, register_views
-from ..streaming.windows import (
-    run_offset_window_stream,
-    run_session_window_stream,
-    run_tumbling_count_stream,
-    sessionize,
-)
+from ..streaming.windows import sessionize
 from .reference_pipeline import run_reference_pipeline
 
 
@@ -699,68 +694,6 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("session_id").alias("n_sessions"),
              F.count(F.lit(1)).alias("n_events"))
     )
-
-
-def streaming_tumbling_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same semantics as events_tumbling_hour but through a real
-    Structured Streaming query (readStream → watermark → window →
-    memory sink) — the oracle SQL is identical, so the streaming
-    engine itself is hash-checked against DuckDB."""
-    return run_tumbling_count_stream(spark, sf_dir)
-
-
-def streaming_date_bin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming tumbling windows at a non-epoch-aligned origin
-    (``F.window``'s ``startTime`` offset) — the streaming twin of
-    ``events_date_bin_downsample``; the oracle states the identical
-    custom-origin bins via DuckDB ``time_bucket``, so the offset
-    semantics are hash-checked through a real streaming query."""
-    return run_offset_window_stream(spark, sf_dir)
-
-
-def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native streaming session windows (F.session_window under a
-    watermark, append mode) — the settled memory-sink result over the
-    watermark-closed sessions; oracle: the same gaps-and-islands SQL as
-    session_window_bounds restricted to closed sessions."""
-    return run_session_window_stream(spark, sf_dir)
-
-
-def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream inner interval join (click ⋈ same-user views in
-    the preceding hour) through real Structured Streaming state — the
-    bounded AvailableNow run settles to exactly the batch time-bounded
-    self-join, so the oracle is plain SQL."""
-    from ..streaming.joins import run_interval_join_stream
-    return run_interval_join_stream(spark, sf_dir)
-
-
-def streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT OUTER stream-stream interval join — unmatched clicks emit
-    NULL view columns only once the watermark proves no match can
-    arrive (the state-eviction path the inner variant never
-    exercises); a sentinel batch pushes the watermark over the bounded
-    lake so the settled set equals the batch LEFT JOIN.  See
-    streaming/joins.py run_interval_join_stream_outer."""
-    from ..streaming.joins import run_interval_join_stream_outer
-    return run_interval_join_stream_outer(spark, sf_dir)
-
-
-def streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming dropDuplicates over (user_id, event_type) — the
-    settled AvailableNow key set equals batch SELECT DISTINCT, so the
-    streaming dedup state machinery is fully oracle-checked."""
-    from ..streaming.dedup import run_dedup_stream
-    return run_dedup_stream(spark, sf_dir)
-
-
-def streaming_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded-state streaming dedup (dropDuplicatesWithinWatermark):
-    per-key state evicted behind the watermark — the unbounded-firehose
-    form; equals DISTINCT on the bounded test source (all duplicates
-    arrive inside the delay window)."""
-    from ..streaming.dedup import run_dedup_within_watermark_stream
-    return run_dedup_within_watermark_stream(spark, sf_dir)
 
 
 # ------------------------------------------------- round-1 widening batch —
@@ -1902,18 +1835,6 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return back.where(F.col("l_quantity") < 10)
 
 
-def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-static broadcast enrichment (the topology missing
-    between the stream-stream joins and the batch joins): the event
-    stream joins a batch-computed per-type stats dimension with NO
-    state store — Spark re-resolves the static side per micro-batch
-    and broadcasts it.  Settled AvailableNow output equals the batch
-    z-score gate, so the oracle is the same SQL as
-    ``events_anomaly_zscore``.  See streaming/enrich.py."""
-    from ..streaming.enrich import run_static_enrich_stream
-    return run_static_enrich_stream(spark, sf_dir)
-
-
 def agg_max_by_min_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``max_by``/``min_by`` (SQL:2023 arg-max aggregates, Spark 3.3+
     ≡ DuckDB arg_max/arg_min): per priority, the total price of the
@@ -1944,17 +1865,6 @@ def scalar_url_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.parse_url(url, F.lit("HOST")).alias("host"),
         F.parse_url(url, F.lit("PATH")).alias("path"),
         F.parse_url(url, F.lit("QUERY"), F.lit("lang")).alias("lang_param"))
-
-
-def streaming_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming sliding-window counts (1 h window, 15 min hop — each
-    event maintains 4 overlapping window states): the overlap is what
-    the tumbling entry never exercises.  Settled == batch
-    ``events_sliding_window``, so the oracle is the same arithmetic
-    window reconstruction.  See streaming/windows.py
-    run_sliding_count_stream."""
-    from ..streaming.windows import run_sliding_count_stream
-    return run_sliding_count_stream(spark, sf_dir)
 
 
 def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:

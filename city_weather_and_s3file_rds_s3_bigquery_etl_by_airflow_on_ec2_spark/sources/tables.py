@@ -77,8 +77,8 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
 # this memo is that catalog.  METADATA ONLY — never rows, never plans,
 # never results: every execution still scans the parquet.  Keyed on
 # (realpath, mtime, size) — plus, for directory tables, the entry
-# count and newest child (mtime, size) (ADVICE r12 #1) — so a
-# rewritten lake under the same path re-infers.
+# count and newest (mtime, size) of every file at any depth (ADVICE
+# r12 #1, r13) — so a rewritten lake under the same path re-infers.
 _SCHEMA_CACHE: dict[tuple, T.StructType] = {}
 
 
@@ -94,15 +94,33 @@ def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame
     return _normalize_types(spark.read.schema(schema).parquet(path))
 
 
+def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The lake's events table as a bounded file stream: the one reader
+    every streaming query over the lake starts from.  Same session
+    confs and schema memo as ``read_parquet_table`` (a file stream
+    needs an explicit schema), the literal ``events.parquet`` file of
+    ``sf_dir`` as its only input, and ``ts`` normalized to the
+    TimestampType that ``withWatermark`` requires."""
+    from ..session import ensure_session_confs
+
+    ensure_session_confs(spark)
+    schema = read_parquet_schema(spark, table_path(sf_dir, "events"))
+    stream = (spark.readStream.schema(schema)
+              .option("pathGlobFilter", "events.parquet")
+              .parquet(sf_dir))
+    return normalize_event_ts(stream)
+
+
 def _schema_cache_key(path: str) -> tuple | None:
     """Cache key for the schema memo (ADVICE r12 #1 hardening): for a
     REGULAR FILE, (realpath, mtime, size) is sound — rewriting the file
     bumps mtime/size.  For a DIRECTORY-style parquet table, a part-file
-    rewritten in place does not necessarily bump the directory's own
-    mtime/size, so the key additionally folds in the count and the
-    newest (mtime, size) of the directory's entries — an in-place
-    part-file rewrite then changes the key and forces re-inference.
-    Unstat-able paths return None (never cached)."""
+    rewritten in place does not necessarily bump any directory's own
+    mtime/size, so the key additionally folds in the number of entries
+    and the newest (mtime, size) of every file under the table, at any
+    depth — an in-place rewrite inside a partition subdirectory then
+    changes the key and forces re-inference.  Unstat-able paths return
+    None (never cached)."""
     try:
         st = os.stat(path)
         real = os.path.realpath(path)
@@ -110,11 +128,11 @@ def _schema_cache_key(path: str) -> tuple | None:
             return (real, st.st_mtime, st.st_size)
         newest = (0.0, 0)
         n = 0
-        with os.scandir(path) as entries:
-            for e in entries:
-                es = e.stat()
-                n += 1
-                newest = max(newest, (es.st_mtime, es.st_size))
+        for root, dirs, files in os.walk(path):
+            n += len(dirs) + len(files)
+            for name in files:
+                fs = os.stat(os.path.join(root, name))
+                newest = max(newest, (fs.st_mtime, fs.st_size))
         return (real, st.st_mtime, st.st_size, n, newest)
     except OSError:
         return None

@@ -83,15 +83,6 @@ def merge_append(df: DataFrame, path: str, key_cols: list[str],
     return n
 
 
-def overwrite(df: DataFrame, path: str,
-              partition_by: list[str] | None = None) -> None:
-    """K5 — truncate-and-reload."""
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
 def bigquery_append_writer(df: DataFrame, table: str):
     """Real K4 when the public spark-bigquery-connector is on the
     classpath; raises a clear error otherwise.

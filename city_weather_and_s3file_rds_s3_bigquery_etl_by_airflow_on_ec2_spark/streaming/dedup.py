@@ -26,61 +26,32 @@ Both emit only the key columns (append mode): which physical row
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from ..sources.tables import read_event_stream
+from . import settle
 
 _KEYS = ["user_id", "event_type"]
 
 
-def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import ensure_session_confs
-    from ..sources.tables import normalize_event_ts
-
-    ensure_session_confs(spark)
-    from ..sources.tables import read_parquet_schema
-    raw_schema = read_parquet_schema(spark, f"{sf_dir}/events.parquet")
-    s = (spark.readStream.schema(raw_schema)
-         .option("pathGlobFilter", "events.parquet")
-         .parquet(sf_dir))
-    return normalize_event_ts(s)
-
-
-def _settle(agg: DataFrame, name: str) -> DataFrame:
-    from . import rotate_sink
-
-    spark = agg.sparkSession
-    qname = rotate_sink(spark, name, f"{name}_{uuid.uuid4().hex[:8]}")
-    query = (agg.writeStream.outputMode("append")
-             .format("memory").queryName(qname)
-             .trigger(availableNow=True)
-             .start())
-    try:
-        query.awaitTermination()
-    finally:
-        if query.isActive:  # pragma: no cover
-            query.stop()
-    return spark.table(qname)
-
-
 def run_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-occurrence-only (user_id, event_type) pairs via streaming
-    ``dropDuplicates`` — settled set == batch DISTINCT on the keys."""
-    stream = _event_stream(spark, sf_dir).select(*_KEYS)
-    return _settle(stream.dropDuplicates(_KEYS), "streamdedup")
+    """Streaming dropDuplicates over (user_id, event_type) — the
+    settled AvailableNow key set equals batch SELECT DISTINCT, so the
+    streaming dedup state machinery is fully oracle-checked."""
+    stream = read_event_stream(spark, sf_dir).select(*_KEYS)
+    return settle(stream.dropDuplicates(_KEYS), "streamdedup", "append")
 
 
 def run_dedup_within_watermark_stream(
     spark: SparkSession, sf_dir: str, watermark: str = "2 hours",
 ) -> DataFrame:
-    """Bounded-state streaming dedup via
-    ``dropDuplicatesWithinWatermark`` (state evicted behind the
-    watermark); equals DISTINCT here because the bounded source
-    delivers every duplicate inside the delay window."""
-    stream = (_event_stream(spark, sf_dir)
+    """Bounded-state streaming dedup (dropDuplicatesWithinWatermark):
+    per-key state evicted behind the watermark — the unbounded-firehose
+    form; equals DISTINCT on the bounded test source (all duplicates
+    arrive inside the delay window)."""
+    stream = (read_event_stream(spark, sf_dir)
               .select("ts", *_KEYS)
               .withWatermark("ts", watermark))
     deduped = (stream.dropDuplicatesWithinWatermark(_KEYS)
                .select(*_KEYS))
-    return _settle(deduped, "streamdedupwm")
+    return settle(deduped, "streamdedupwm", "append")

@@ -24,14 +24,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .dedup import _event_stream, _settle
+from ..sources.tables import read_event_stream, read_parquet_table
+from . import settle
 
 
 def run_static_enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming z-score anomaly gate: batch per-type stats broadcast
-    into a stateless stream-static join; settled == batch filter."""
-    from ..sources.tables import read_parquet_table
-
+    """Stream-static broadcast enrichment (the topology missing
+    between the stream-stream joins and the batch joins): the event
+    stream joins a batch-computed per-type stats dimension with NO
+    state store — Spark re-resolves the static side per micro-batch
+    and broadcasts it.  Settled AvailableNow output equals the batch
+    z-score gate, so the oracle is the same SQL as
+    ``events_anomaly_zscore``."""
     events = read_parquet_table(spark, sf_dir, "events")
     stats = events.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -43,10 +47,10 @@ def run_static_enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     st = stats.select("event_type", mean.alias("mu"),
                       F.sqrt(var).alias("sigma"))
 
-    stream = _event_stream(spark, sf_dir)
+    stream = read_event_stream(spark, sf_dir)
     z = (F.col("value") - F.col("mu")) / F.col("sigma")
     flagged = (stream.join(F.broadcast(st), "event_type")
                .select("event_id", "event_type", "value",
                        F.round(z, 4).alias("zscore"))
                .where(F.abs(F.col("zscore")) >= 2.0))
-    return _settle(flagged, "enrich")
+    return settle(flagged, "enrich", "append")

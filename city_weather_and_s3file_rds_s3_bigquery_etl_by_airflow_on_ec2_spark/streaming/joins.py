@@ -19,10 +19,11 @@ if one user dominates).
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources.tables import normalize_event_ts, read_event_stream
+from . import settle
 
 
 def run_interval_join_stream(
@@ -31,22 +32,18 @@ def run_interval_join_stream(
     lookback: str = "60 minutes",
     watermark: str = "2 hours",
 ) -> DataFrame:
-    """Streaming click←view correlation: for every 'click' event, the
-    'view' events of the same user with ``c.ts - lookback <= v.ts <=
-    c.ts``. Returns the settled pairs with the gap in seconds."""
-    from ..session import ensure_session_confs
-    from ..sources.tables import normalize_event_ts
+    """Stream-stream inner interval join (click ⋈ same-user views in
+    the preceding hour) through real Structured Streaming state — the
+    bounded AvailableNow run settles to exactly the batch time-bounded
+    self-join, so the oracle is plain SQL.
 
-    ensure_session_confs(spark)
-    from ..sources.tables import read_parquet_schema
-    raw_schema = read_parquet_schema(spark, f"{sf_dir}/events.parquet")
+    For every 'click' event, the 'view' events of the same user with
+    ``c.ts - lookback <= v.ts <= c.ts``; returns the settled pairs with
+    the gap in seconds."""
 
     def side(event_type: str, prefix: str) -> DataFrame:
-        s = (spark.readStream.schema(raw_schema)
-             .option("pathGlobFilter", "events.parquet")
-             .parquet(sf_dir))
-        s = normalize_event_ts(s)  # nanos-as-long OR micros-NTZ
-        return (s.where(F.col("event_type") == event_type)
+        return (read_event_stream(spark, sf_dir)
+                .where(F.col("event_type") == event_type)
                 .select(F.col("event_id").alias(f"{prefix}_id"),
                         F.col("user_id").alias(f"{prefix}_user"),
                         F.col("ts").alias(f"{prefix}_ts"))
@@ -61,19 +58,7 @@ def run_interval_join_stream(
         & (F.col("view_ts") >= F.col("click_ts") - F.expr(
             f"INTERVAL {lookback}")),
         "inner")
-    from . import rotate_sink
-    qname = rotate_sink(spark, "intervaljoin",
-                        f"intervaljoin_{uuid.uuid4().hex[:8]}")
-    q = (joined.writeStream.outputMode("append")
-         .format("memory").queryName(qname)
-         .trigger(availableNow=True)
-         .start())
-    try:
-        q.awaitTermination()
-    finally:
-        if q.isActive:  # pragma: no cover
-            q.stop()
-    return spark.table(qname).select(
+    return settle(joined, "intervaljoin", "append").select(
         F.col("click_id"), F.col("view_id"),
         F.col("click_user").alias("user_id"),
         (F.unix_timestamp("click_ts") - F.unix_timestamp("view_ts"))
@@ -87,29 +72,31 @@ def run_interval_join_stream_outer(
     lookback: str = "60 minutes",
     watermark: str = "2 hours",
 ) -> DataFrame:
-    """LEFT OUTER stream-stream interval join: clicks with no view in
-    the preceding hour emit with NULL view columns — but only once the
-    watermark PROVES no matching view can still arrive.  That proof
-    needs event time to advance past the last real click, so the
-    bounded lake is staged into a temp dir together with a far-future
+    """LEFT OUTER stream-stream interval join — unmatched clicks emit
+    NULL view columns only once the watermark proves no match can
+    arrive (the state-eviction path the inner variant never
+    exercises); a sentinel batch pushes the watermark over the bounded
+    lake so the settled set equals the batch LEFT JOIN.
+
+    The proof needs event time to advance past the last real click, so
+    the bounded lake is staged into a temp dir together with a far-future
     sentinel row per side (user_id -1, filtered from the output); the
     sentinel batch pushes the watermark over every real row and
     flushes the unmatched-left state.  ``maxFilesPerTrigger=1`` keeps
     the sentinel in its own micro-batch — watermarks only advance on
     batch boundaries.
 
-    The settled output equals the batch time-bounded LEFT JOIN, so the
-    outer-join state machinery (join buffer + null-side emission on
-    watermark, the part the inner variant never exercises) is fully
-    SQL-oracle-checked.  Unbounded-production note: a live feed pushes
-    the watermark by itself; the sentinel is purely the bounded-replay
-    harness."""
+    The outer-join state machinery (join buffer + null-side emission
+    on watermark) is therefore fully SQL-oracle-checked.  This is the
+    one stream that does not start from ``read_event_stream``: it
+    reads the staged directory one file per trigger.
+    Unbounded-production note: a live feed pushes the watermark by
+    itself; the sentinel is purely the bounded-replay harness."""
     import os
     import shutil
     import tempfile
 
     from ..session import ensure_session_confs
-    from ..sources.tables import normalize_event_ts
 
     ensure_session_confs(spark)
 
@@ -184,20 +171,11 @@ def run_interval_join_stream_outer(
         & (F.col("view_ts") >= F.col("click_ts") - F.expr(
             f"INTERVAL {lookback}")),
         "left_outer")
-    from . import rotate_sink
-    qname = rotate_sink(spark, "intervaljoinouter",
-                        f"intervaljoinouter_{uuid.uuid4().hex[:8]}")
-    q = (joined.writeStream.outputMode("append")
-         .format("memory").queryName(qname)
-         .trigger(availableNow=True)
-         .start())
     try:
-        q.awaitTermination()
+        settled = settle(joined, "intervaljoinouter", "append")
     finally:
-        if q.isActive:  # pragma: no cover
-            q.stop()
         shutil.rmtree(stage, ignore_errors=True)
-    return (spark.table(qname)
+    return (settled
             .where(F.col("click_user") >= 0)
             .select(
                 F.col("click_id"), F.col("view_id"),

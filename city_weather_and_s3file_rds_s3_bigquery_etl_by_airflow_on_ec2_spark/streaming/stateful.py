@@ -14,7 +14,6 @@ key, checkpointed, and recovered on restart.
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
@@ -22,6 +21,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from ..sources.tables import read_event_stream
+from . import settle
 
 OUTPUT_SCHEMA = T.StructType([
     T.StructField("user_id", T.LongType()),
@@ -61,34 +63,11 @@ def final_user_state(updates: DataFrame) -> DataFrame:
 def running_user_totals_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drive the stateful operator over the events table as a bounded
     stream; returns the final per-user totals as a batch DataFrame."""
-    from ..session import ensure_session_confs
-
-    ensure_session_confs(spark)
-    from ..sources.tables import read_parquet_schema
-    raw_schema = read_parquet_schema(spark, f"{sf_dir}/events.parquet")
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    from ..sources.tables import normalize_event_ts
-    stream = normalize_event_ts(stream)  # nanos-as-long OR micros-NTZ
     updated = (
-        stream.groupBy("user_id")
+        read_event_stream(spark, sf_dir).groupBy("user_id")
         .applyInPandasWithState(
             _update, OUTPUT_SCHEMA, STATE_SCHEMA,
             "update", GroupStateTimeout.NoTimeout)
     )
-    from . import rotate_sink
-    qname = rotate_sink(spark, "stateful",
-                        f"stateful_{uuid.uuid4().hex[:8]}")
-    q = (updated.writeStream.outputMode("update")
-         .format("memory").queryName(qname)
-         .trigger(availableNow=True).start())
-    try:
-        q.awaitTermination()
-    finally:
-        if q.isActive:  # pragma: no cover
-            q.stop()
     # keep the last update per user (a user may emit once per batch)
-    return final_user_state(spark.table(qname))
+    return final_user_state(settle(updated, "stateful", "update"))

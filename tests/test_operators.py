@@ -420,62 +420,6 @@ def test_minhash_band_cap_bounds_hot_bucket_blowup(spark):
     assert len(found) >= len(planted) * 0.8
 
 
-def test_continuous_rollup_idempotent(spark, tmp_path):
-    """foreachBatch-maintained hourly rollup equals the direct batch
-    aggregate and converges (not duplicates) on re-run."""
-    from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.streaming.rollup import (
-        continuous_hourly_rollup,
-    )
-
-    out = str(tmp_path / "rollup")
-    first = continuous_hourly_rollup(spark, SF_SMALL, out)
-    key = lambda rows: sorted(  # noqa: E731
-        (r.window_start, r.event_type, r.n_events, r.sum_value) for r in rows)
-    ev = read_parquet_table(spark, SF_SMALL, "events")
-    batch = (ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-             .agg(F.count(F.lit(1)).alias("n_events"),
-                  F.round(F.sum("value"), 2).alias("sum_value"))
-             .select(F.col("w.start").alias("window_start"), "event_type",
-                     "n_events", "sum_value"))
-    assert key(first.collect()) == key(batch.collect())
-    second = continuous_hourly_rollup(spark, SF_SMALL, out)
-    assert key(second.collect()) == key(batch.collect())
-
-
-def test_incremental_ingest_idempotent(spark, tmp_path):
-    """Landing-dir streaming ingest: drains new files, skips seen ones
-    (checkpoint), and converges under replays (merge key)."""
-    from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.plans.reference_pipeline import (
-        GOLDEN_OWM_PAYLOAD,
-    )
-    from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.streaming.ingest import (
-        ingest_available,
-        land_payloads,
-    )
-
-    landing = str(tmp_path / "landing")
-    wh = str(tmp_path / "wh")
-    ckpt = str(tmp_path / "ckpt")
-
-    p1 = dict(GOLDEN_OWM_PAYLOAD)
-    p2 = dict(GOLDEN_OWM_PAYLOAD, name="Chicago", id=123, dt=1742203868 + 3600)
-    land_payloads(landing, [p1])
-    out1 = ingest_available(spark, landing, wh, ckpt)
-    assert out1.count() == 1
-
-    # second arrival: only the new document is processed and merged
-    land_payloads(landing, [p2])
-    out2 = ingest_available(spark, landing, wh, ckpt)
-    assert out2.count() == 2
-    assert {r.city for r in out2.collect()} == {"Houston", "Chicago"}
-
-    # wiped checkpoint replays everything; merge key keeps it converged
-    import shutil
-    shutil.rmtree(ckpt)
-    out3 = ingest_available(spark, landing, wh, str(tmp_path / "ckpt2"))
-    assert out3.count() == 2
-
-
 def test_dedup_clusters_transitive(spark):
     """a~b and b~c (but not a~c directly) must land in one cluster."""
     from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.operators.dedup import (
@@ -1313,6 +1257,39 @@ def test_memory_sink_rotation_bounds_session_state(spark):
     assert len(live) == 1
 
 
+def test_streaming_entries_leave_no_checkpoint_or_query(spark, tmp_path):
+    """With a session-wide ``spark.sql.streaming.checkpointLocation``
+    set (as the benchmark sets it), repeated streaming entries must
+    leave nothing behind: every memory-sink query checkpoints into its
+    own temporary directory and removes it, stops, and keeps exactly
+    one live sink view per entry point — and the results repeat."""
+    import re
+
+    from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.plans.registry import (
+        REGISTRY,
+    )
+
+    entries = {"streaming_tumbling_hour": "tumbling",
+               "streaming_dedup_keys": "streamdedup"}
+    conf = "spark.sql.streaming.checkpointLocation"
+    ckpt = tmp_path / "ckpt"
+    ckpt.mkdir()
+    spark.conf.set(conf, str(ckpt))
+    try:
+        for name in entries:
+            runs = [sorted(REGISTRY[name].fn(spark, SF_SMALL).collect())
+                    for _ in range(2)]
+            assert runs[0] == runs[1] and runs[0], name
+    finally:
+        spark.conf.unset(conf)
+    assert list(ckpt.iterdir()) == []
+    assert spark.streams.active == []
+    views = [t.name for t in spark.catalog.listTables()]
+    for prefix in entries.values():
+        live = [v for v in views if re.fullmatch(rf"{prefix}_[0-9a-f]{{8}}", v)]
+        assert len(live) == 1, (prefix, live)
+
+
 def test_clusters_star_equivalence_and_chain(spark):
     """large-star/small-star must label components identically to the
     propagation loop, including the adversarial shapes: a long chain
@@ -1535,9 +1512,9 @@ def test_streaming_dedup_equals_batch_distinct(spark, tmp_path):
     on a synthetic events lake with planted duplicates."""
     import datetime
 
-    from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.plans.relational import (
-        streaming_dedup_keys,
-        streaming_dedup_watermarked,
+    from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.streaming.dedup import (
+        run_dedup_stream,
+        run_dedup_within_watermark_stream,
     )
 
     import pandas as pd
@@ -1555,11 +1532,11 @@ def test_streaming_dedup_equals_batch_distinct(spark, tmp_path):
     want = {(u, t) for u in range(5) for t in ("view", "click")}
 
     got = {(r.user_id, r.event_type)
-           for r in streaming_dedup_keys(spark, str(tmp_path)).collect()}
+           for r in run_dedup_stream(spark, str(tmp_path)).collect()}
     assert got == want
     got_wm = {(r.user_id, r.event_type)
-              for r in streaming_dedup_watermarked(spark,
-                                                   str(tmp_path)).collect()}
+              for r in run_dedup_within_watermark_stream(
+                  spark, str(tmp_path)).collect()}
     assert got_wm == want
 
 
@@ -2347,12 +2324,12 @@ def test_streaming_static_enrich_settles_to_batch_gate(spark):
     from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.plans.extensions import (
         events_anomaly_zscore,
     )
-    from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.plans.relational import (
-        streaming_static_enrich,
+    from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.streaming.enrich import (
+        run_static_enrich_stream,
     )
 
     got = sorted((r.event_id, r.zscore)
-                 for r in streaming_static_enrich(spark, SF_SMALL).collect())
+                 for r in run_static_enrich_stream(spark, SF_SMALL).collect())
     want = sorted((r.event_id, r.zscore)
                   for r in events_anomaly_zscore(spark, SF_SMALL).collect())
     assert got == want and got
@@ -2437,11 +2414,13 @@ def test_feature_hashing_is_stable_and_conserves_tokens(spark):
 def test_streaming_sliding_settles_to_batch_sliding(spark):
     from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.plans.relational import (
         events_sliding_window,
-        streaming_sliding_window,
+    )
+    from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.streaming.windows import (
+        run_sliding_count_stream,
     )
 
     got = sorted((r.window_start, r.n_events)
-                 for r in streaming_sliding_window(spark, SF_SMALL).collect())
+                 for r in run_sliding_count_stream(spark, SF_SMALL).collect())
     want = sorted((r.window_start, r.n_events)
                   for r in events_sliding_window(spark, SF_SMALL).collect())
     assert got == want and got

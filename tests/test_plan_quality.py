@@ -751,8 +751,16 @@ def test_generate_entries_full_materialization_bounded(spark, registry_sweep):
         if not name.startswith("streaming_") and "Generate" in rec.optimized
     ]
     # the sweep must keep finding the known Generate-bearing families
-    # (shingling, dup spans, seq/shard packing, sentence split, ngrams);
-    # if this drops the discovery predicate broke, not the registry
+    # (shingling, dup spans, seq packing, sentence split, ngrams, the
+    # r5 dsir case, explode/unpivot); if one drops out, the discovery
+    # predicate or the SF_SMALL capture broke, not the registry
+    pinned = {
+        "dedup_minhash_lsh", "dedup_token_jaccard", "text_ngram_dup_spans",
+        "corpus_seq_pack", "corpus_loader_pipeline", "text_sentence_split",
+        "text_ngram_profile", "text_chunking", "corpus_dsir_weights",
+        "text_feature_hashing", "explode_variants", "unpivot_lineitem",
+    }
+    assert pinned <= set(found_names), sorted(pinned - set(found_names))
     assert len(found_names) >= 10, found_names
     times = {}
     for name in found_names:

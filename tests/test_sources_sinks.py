@@ -224,52 +224,6 @@ def test_jdbc_derby_typed_roundtrip(spark, tmp_path):
     assert got[1].descr is None and got[2].obs_ts is None and got[2].temp is None
 
 
-def test_streaming_jdbc_upsert_foreachbatch(spark, tmp_path):
-    """EXECUTED streaming → JDBC upsert (streaming/sinks.py): two
-    AvailableNow drains over a file landing dir, with the second batch
-    overlapping the first on the key — the foreachBatch anti-join must
-    keep the destination exactly-once even though delivery is
-    at-least-once (the reference's blind execute_values INSERT
-    duplicates on re-run; this sink is the fix)."""
-    import json
-
-    from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.sources.jdbc import (
-        derby_endpoint,
-    )
-    from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.streaming.sinks import (
-        jdbc_upsert_stream,
-    )
-
-    ep = derby_endpoint(str(tmp_path / "derbyupsert"))
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-
-    def drain():
-        stream = (spark.readStream
-                  .schema("id int, city string, temp double")
-                  .json(str(landing)))
-        q = (jdbc_upsert_stream(stream, ep, "stream_weather", ["id"], ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-
-    batch1 = [{"id": i, "city": f"c{i}", "temp": 270.0 + i} for i in range(5)]
-    (landing / "b1.json").write_text(
-        "\n".join(json.dumps(r) for r in batch1))
-    drain()
-    # second file: ids 3..7 — 3,4 overlap and must NOT duplicate
-    batch2 = [{"id": i, "city": f"c{i}", "temp": 270.0 + i} for i in range(3, 8)]
-    (landing / "b2.json").write_text(
-        "\n".join(json.dumps(r) for r in batch2))
-    drain()
-
-    got = sorted(
-        jdbc_table_reader(spark, ep, "stream_weather").load().collect(),
-        key=lambda r: r.id)
-    assert [r.id for r in got] == list(range(8))
-    assert got[3].temp == 273.0
-
-
 def test_schema_memo_reinfers_on_inplace_directory_rewrite(spark, tmp_path):
     """ADVICE r12 #1 / VERDICT r12 #7: the schema memo must not serve a
     stale schema after a DIRECTORY-style parquet table is rewritten in
@@ -300,3 +254,48 @@ def test_schema_memo_reinfers_on_inplace_directory_rewrite(spark, tmp_path):
     second = read_parquet_schema(spark, tbl)
     assert [f.name for f in second.fields] == ["id", "y"], (
         "stale schema served after in-place rewrite")
+
+
+def test_schema_memo_reinfers_on_nested_partition_rewrite(spark, tmp_path):
+    """ADVICE r13 low: a PARTITIONED table keeps its part files one
+    level down, so the memo key must look below the top-level entries.
+    The only part file (inside ``p=0/``) is replaced in place by one
+    with a different schema, and every directory keeps its old stat;
+    the memo must re-infer."""
+    import os
+    import shutil
+    import time
+
+    from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.sources.tables import (
+        read_parquet_schema,
+    )
+
+    tbl = tmp_path / "part.parquet"
+    spark.range(5).selectExpr("id", "cast(id as double) as x", "0 as p") \
+        .coalesce(1).write.partitionBy("p").parquet(str(tbl))
+    (part,) = (tbl / "p=0").glob("*.parquet")
+    dirs = (tbl, tbl / "p=0")
+
+    def pin_dirs():
+        for d in dirs:
+            os.utime(d, (1_000_000_000, 1_000_000_000))
+
+    pin_dirs()
+    first = read_parquet_schema(spark, str(tbl))
+    assert [f.name for f in first.fields] == ["id", "x", "p"]
+    assert read_parquet_schema(spark, str(tbl)) is first      # memo hit
+
+    time.sleep(0.05)  # ensure the new part-file's mtime can differ
+    other = tmp_path / "other.parquet"
+    spark.range(5).selectExpr("id", "cast(id as string) as y") \
+        .coalesce(1).write.parquet(str(other))
+    (src,) = other.glob("*.parquet")
+    # same names (the file and its Hadoop checksum sidecar): no
+    # directory entry is added or removed
+    for frm, to in ((src, part), (src.with_name(f".{src.name}.crc"),
+                                  part.with_name(f".{part.name}.crc"))):
+        shutil.copyfile(frm, to)
+    pin_dirs()
+    second = read_parquet_schema(spark, str(tbl))
+    assert [f.name for f in second.fields] == ["id", "y", "p"], (
+        "stale schema served after a nested part-file rewrite")
