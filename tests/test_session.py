@@ -1,6 +1,7 @@
 """Session sizing: with ``SPARK_GRAFT_CPUS`` unset, ``get_spark`` sizes
 the local master and the shuffle partitions from the CPUs the process
-may run on, not from a constant written for one machine."""
+may run on, not from a constant written for one machine; the test
+suite sizes its JVM heap from the host's memory."""
 
 from __future__ import annotations
 
@@ -41,3 +42,21 @@ def test_cpu_default_follows_cpu_affinity(monkeypatch):
     opts = _built_options(monkeypatch)
     assert opts["spark.master"] == "local[5]"
     assert opts["spark.sql.shuffle.partitions"] == "5"
+
+
+def test_test_heap_follows_host_memory(tmp_path):
+    """The suite's JVM heap is 40% of ``MemTotal``, between 2g and the
+    program's 48g, and unset where the host's memory is unreadable."""
+    from .conftest import host_sized_heap
+
+    def heap(kb: int | None) -> str | None:
+        path = tmp_path / "meminfo"
+        path.write_text("" if kb is None else
+                        f"MemTotal:       {kb} kB\nMemFree:  1 kB\n")
+        return host_sized_heap(str(path))
+
+    assert heap(16456384) == "6g"      # a 16 GB host
+    assert heap(256 * 1024 ** 2) == "48g"
+    assert heap(2 * 1024 ** 2) == "2g"
+    assert heap(None) is None
+    assert host_sized_heap(str(tmp_path / "absent")) is None
