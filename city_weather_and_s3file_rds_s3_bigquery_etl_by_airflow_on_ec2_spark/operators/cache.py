@@ -39,16 +39,13 @@ from pyspark.sql import DataFrame, SparkSession
 _TRACKED: list[DataFrame] = []
 
 
-def scoped_persist(
-    df: DataFrame,
-    level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-) -> DataFrame:
-    """Persist ``df`` unless its (canonicalized) plan is already in
-    the session's CacheManager; track the handle for
+def scoped_persist(df: DataFrame) -> DataFrame:
+    """Persist ``df`` MEMORY_AND_DISK unless its (canonicalized) plan
+    is already in the session's CacheManager; track the handle for
     :func:`release_persisted`."""
     if df.storageLevel != StorageLevel.NONE:
         return df
-    df = df.persist(level)
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
     _TRACKED.append(df)
     return df
 

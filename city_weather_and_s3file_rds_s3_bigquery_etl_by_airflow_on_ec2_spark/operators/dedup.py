@@ -8,8 +8,9 @@ Scale design notes
   the shuffle key is 32 fixed bytes instead of the document body.
 - MinHash-LSH: banding turns near-dup detection from O(n²) pairs into
   an equi-join on (band_id, band_hash) buckets — the only join shape
-  that survives web-scale corpora. Built on pyspark.ml's MinHashLSH
-  (public API) over a HashingTF token space.
+  that survives web-scale corpora. Built from native Catalyst
+  expressions (shingle → minhash → AND-amplified band), no ML
+  pipeline or sparse vectors.
 - SimHash: 64-bit signature per doc via one Arrow-batched pandas UDF
   (per-token hashing is not expressible as Catalyst expressions), then
   near-dup candidates = equality on rotated signature bands.
@@ -28,6 +29,16 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.text import tokens
+
+# token_jaccard_pairs: rows per (block key) above which a block leaves
+# the exact prefix-filter path for the banded-MinHash detour, and the
+# detour's fixed geometry (single-token minhash, 8 bands × 2 rows,
+# per-(block, band) bucket ceiling, hash seed)
+MAX_BLOCK_SIZE = 100_000
+DEGRADE_NUM_BANDS = 8
+DEGRADE_ROWS_PER_BAND = 2
+DEGRADE_MAX_BAND_BUCKET = 1024
+DEGRADE_SEED = 42
 
 
 def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
@@ -48,52 +59,6 @@ def hash_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return (
         hashed.groupBy("content_sha")
         .agg(F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("dup_count"))
-    )
-
-
-def minhash_lsh_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    shingle_size: int = 3,
-    num_hash_tables: int = 8,
-    num_features: int = 1 << 18,
-    jaccard_distance_threshold: float = 0.6,
-    seed: int = 42,
-) -> DataFrame:
-    """Near-duplicate candidate pairs via MinHash-LSH
-    (shingle→minhash→band→bucket-join), returning
-    (id_a, id_b, jaccard_distance) with id_a < id_b.
-
-    Shingling is load-bearing for scale: single-token features over a
-    small vocabulary make every document collide in every minhash
-    bucket (candidates → n²); ``shingle_size``-word shingles blow the
-    feature universe up so buckets stay sparse and the
-    ``approxSimilarityJoin`` bucket equi-join cost tracks true
-    near-duplicates. Deterministic given ``seed``, but hash-dependent —
-    rows-only gate + the exact Jaccard verifier in tests.
-    """
-    from pyspark.ml.feature import HashingTF, MinHashLSH, NGram
-
-    toks = df.select(F.col(id_col), tokens(F.col(text_col)).alias("toks")) \
-             .where(F.size("toks") >= shingle_size)
-    shingled = NGram(n=shingle_size, inputCol="toks",
-                     outputCol="shingles").transform(toks)
-    tf = HashingTF(inputCol="shingles", outputCol="features",
-                   numFeatures=num_features, binary=True)
-    feats = tf.transform(shingled)
-    lsh = MinHashLSH(inputCol="features", outputCol="hashes",
-                     numHashTables=num_hash_tables, seed=seed)
-    model = lsh.fit(feats)
-    pairs = model.approxSimilarityJoin(feats, feats, jaccard_distance_threshold,
-                                       distCol="jaccard_distance")
-    return (
-        pairs.select(
-            F.col(f"datasetA.{id_col}").alias("id_a"),
-            F.col(f"datasetB.{id_col}").alias("id_b"),
-            F.round("jaccard_distance", 4).alias("jaccard_distance"),
-        )
-        .where(F.col("id_a") < F.col("id_b"))
     )
 
 
@@ -566,12 +531,6 @@ def token_jaccard_pairs(
     length_col: str | None = None,
     length_band: int = 8,
     min_jaccard: float = 0.5,
-    max_block_size: int | None = 100_000,
-    strict: bool = False,
-    degrade_num_bands: int = 8,
-    degrade_rows_per_band: int = 2,
-    degrade_max_band_bucket: int = 1024,
-    seed: int = 42,
 ) -> DataFrame:
     """Exact token-set Jaccard over blocked candidate pairs.
 
@@ -587,33 +546,27 @@ def token_jaccard_pairs(
     block, and (lang, len-band) blocks grow linearly with the corpus —
     at web scale this operator is the small-SF verifier, NOT the
     production dedup path (that is ``minhash_lsh_pairs_native``).
-    ``max_block_size`` enforces the contract at runtime.
+    ``MAX_BLOCK_SIZE`` enforces the contract at runtime.
 
-    Oversized-block handling (VERDICT r6 #4): by default (``strict=
-    False``) any block larger than the cap DEGRADES instead of
-    failing — its rows are routed off the quadratic prefix-filter path
-    onto a banded MinHash candidate path *within the same block key*
-    (single-token features, so the minhash approximates exactly the
-    token-set Jaccard this operator verifies), capped per
-    (block, band) bucket by ``degrade_max_band_bucket`` via
-    :func:`cap_band_buckets`.  Survivor candidates are exact-verified
-    like every other pair, so returned jaccards stay exact; what is
-    lost is RECALL inside oversized blocks only (collision prob
-    1-(1-s^r)^b ≈ 0.90 at s=0.5 with b=8, r=2, minus cap losses on
-    hot-template mass, which exact/content-hash dedup owns anyway) —
-    at 100 TB a single hot (lang × len-band) block then costs bounded
-    work instead of killing the whole job.  Non-strict mode triggers
-    ONE eager metadata-scale probe job at build time (the column-
-    pruned block census, persisted and shared with the guard's
-    broadcast join) so the LSH detour — whose lineage would add a full
-    text-column corpus scan per execution — is attached ONLY when an
-    oversized block exists; healthy block profiles keep the exact
-    strict-mode plan.  ``strict=True`` restores the fully-lazy
-    fail-fast contract: any oversized block raises before going
-    quadratic.  Pass ``max_block_size=None`` only when the block
-    profile is known (the raise becomes unreachable, but the guard
-    subtree is still built — it doubles as an optimizer barrier, see
-    below)."""
+    Oversized-block handling (VERDICT r6 #4): any block larger than
+    ``MAX_BLOCK_SIZE`` DEGRADES instead of failing — its rows are
+    routed off the quadratic prefix-filter path onto a banded MinHash
+    candidate path *within the same block key* (single-token features,
+    so the minhash approximates exactly the token-set Jaccard this
+    operator verifies), capped per (block, band) bucket by
+    ``DEGRADE_MAX_BAND_BUCKET`` via :func:`cap_band_buckets`.
+    Survivor candidates are exact-verified like every other pair, so
+    returned jaccards stay exact; what is lost is RECALL inside
+    oversized blocks only (collision prob 1-(1-s^r)^b ≈ 0.90 at s=0.5
+    with b=8, r=2, minus cap losses on hot-template mass, which
+    exact/content-hash dedup owns anyway) — at 100 TB a single hot
+    (lang × len-band) block then costs bounded work instead of killing
+    the whole job.  The check triggers ONE eager metadata-scale probe
+    job at build time (the column-pruned block census, persisted and
+    shared with the guard's broadcast join) so the LSH detour — whose
+    lineage would add a full text-column corpus scan per execution —
+    is attached ONLY when an oversized block exists; healthy block
+    profiles keep the plain prefix-filter plan."""
     if min_jaccard <= 0.0:
         raise ValueError(
             "token_jaccard_pairs requires min_jaccard > 0: prefix-filtered "
@@ -627,13 +580,10 @@ def token_jaccard_pairs(
                          "cross product")
     # Guard: count block sizes from a column-pruned scan (no
     # tokenization), keep ONLY the oversized blocks — normally an empty
-    # set — broadcast-left-join them onto `t`, and put a raise_error
-    # branch inside the tokset expression so any oversized block fails
-    # the job before going quadratic.
-    #
-    # The guard when() is ALSO a load-bearing optimizer barrier, so it
-    # is built even for max_block_size=None (with an unreachable 2^62
-    # cap): without it, Catalyst infers `size(tokenize(text)) > 0` from
+    # set — and broadcast-left-join them onto `t`.  The tokset
+    # expression carries a raise_error branch for oversized blocks;
+    # the degrade filter below makes it runtime-unreachable, but the
+    # guard when() is a load-bearing optimizer barrier: without it, Catalyst infers `size(tokenize(text)) > 0` from
     # the downstream explode (InferFiltersFromGenerate) and pushes it
     # into the parquet scan; the filtered scan's *static* size estimate
     # then collapses below autoBroadcastJoinThreshold and the planner
@@ -644,7 +594,7 @@ def token_jaccard_pairs(
     # is non-deterministic to Catalyst, so the barrier blocks the
     # filter inference and the plan stays shuffle-join + AQE, which
     # upgrades genuinely-small sides to broadcast from RUNTIME stats.
-    cap = max_block_size if max_block_size is not None else (1 << 62)
+    cap = MAX_BLOCK_SIZE
     blk_sel = [F.col(c) for c in block_cols]
     if length_col:
         blk_sel.append(
@@ -656,18 +606,16 @@ def token_jaccard_pairs(
         .agg(F.count(F.lit(1)).alias("_blk_n"))
         .where(F.col("_blk_n") > cap)
     )
-    # Degrade-mode guard probe (r7): attach the banded-LSH detour ONLY
-    # when an oversized block actually exists — otherwise the detour's
-    # lineage would cost one extra full TEXT-column corpus scan at
-    # every execution even on healthy block profiles (the common
-    # case).  The probe is an eager metadata-scale job over the
-    # column-pruned block census (no text column), same pattern as
-    # prefix_sum's offset jobs; the census is scoped-persisted so the
-    # probe and the guard's broadcast join share one materialization.
-    degrade = False
-    if not strict:
-        oversized = scoped_persist(oversized)
-        degrade = bool(oversized.take(1))
+    # Degrade probe (r7): attach the banded-LSH detour ONLY when an
+    # oversized block actually exists — otherwise the detour's lineage
+    # would cost one extra full TEXT-column corpus scan at every
+    # execution even on healthy block profiles (the common case).  The
+    # probe is an eager metadata-scale job over the column-pruned block
+    # census (no text column), same pattern as prefix_sum's offset
+    # jobs; the census is scoped-persisted so the probe and the guard's
+    # broadcast join share one materialization.
+    oversized = scoped_persist(oversized)
+    degrade = bool(oversized.take(1))
     sel = [F.col(id_col), *[F.col(c) for c in block_cols],
            F.array_distinct(tokens(F.col(text_col))).alias("tokset")]
     if length_col:
@@ -675,12 +623,12 @@ def token_jaccard_pairs(
     t_all = df.select(*sel).join(F.broadcast(oversized), on=join_keys,
                                  how="left")
     if degrade:
-        # degrade mode: the prefix-filter path sees only sub-cap rows;
-        # oversized-block rows take the banded-minhash detour below.
-        # The raise_error branch is now runtime-unreachable but MUST
-        # stay in the expression tree — it is the optimizer barrier
-        # (see the guard comment above), and Catalyst does not prune
-        # CaseWhen branches from upstream filter constraints.
+        # the prefix-filter path sees only sub-cap rows; oversized-block
+        # rows take the banded-minhash detour below.  The raise_error
+        # branch is runtime-unreachable but MUST stay in the expression
+        # tree — it is the optimizer barrier (see the guard comment
+        # above), and Catalyst does not prune CaseWhen branches from
+        # upstream filter constraints.
         t_all = t_all.where(F.col("_blk_n").isNull())
     t = (
         t_all
@@ -690,10 +638,8 @@ def token_jaccard_pairs(
                 F.raise_error(F.concat(
                     F.lit("token_jaccard_pairs: block of "),
                     F.col("_blk_n").cast("string"),
-                    F.lit(f" rows exceeds max_block_size={cap}; "
+                    F.lit(f" rows exceeds MAX_BLOCK_SIZE={cap}; "
                           "exact Jaccard is quadratic per block - use "
-                          "strict=False to degrade oversized blocks to "
-                          "the banded-LSH path, use "
                           "minhash_lsh_pairs_native for production dedup, "
                           "or raise the cap")))))
         .drop("_blk_n"))
@@ -701,7 +647,6 @@ def token_jaccard_pairs(
     # frequency census, the rarest-first ordering, AND both verify
     # re-attach joins; uncached, the scan+tokenize lineage executes 4×
     # (scoped — released by the caller's release_persisted() boundary)
-    from .cache import scoped_persist
     t = scoped_persist(t)
     # --- candidate generation: prefix-filtered self-join -------------
     # (Bayardo, Ma & Srikant, "Scaling Up All Pairs Similarity Search",
@@ -740,11 +685,11 @@ def token_jaccard_pairs(
             F.broadcast(oversized.select(*join_keys)), on=join_keys,
             how="inner")
         banded_o, sets_o = _minhash_banded(
-            over_docs, text_col, id_col, 1, degrade_num_bands,
-            degrade_rows_per_band, seed, carry_cols=tuple(join_keys))
+            over_docs, text_col, id_col, 1, DEGRADE_NUM_BANDS,
+            DEGRADE_ROWS_PER_BAND, DEGRADE_SEED, carry_cols=tuple(join_keys))
         banded_o = scoped_persist(banded_o)
         banded_o = cap_band_buckets(
-            banded_o, degrade_max_band_bucket,
+            banded_o, DEGRADE_MAX_BAND_BUCKET,
             keys=(*join_keys, "band_idx", "band_hash"))
         oa, ob = banded_o.alias("oa"), banded_o.alias("ob")
         cands_lsh = (

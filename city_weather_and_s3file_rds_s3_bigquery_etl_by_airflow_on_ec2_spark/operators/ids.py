@@ -123,10 +123,9 @@ def range_bucket_expr(df: DataFrame, sketch_expr, second_expr, n: int):
     aggregates replace the former one-sequential-``approxQuantile``-job-
     per-value loop, which dominated the loader's wall at sf0.1), at
     most ``_MAX_TIE_SPLITS`` of them (a RuntimeWarning names any heavy
-    values the cap drops).  When the input is NOT persisted (e.g.
-    ``prefix_sum(..., persist_input=False)``), that one job re-runs the
-    full input lineage once — callers with expensive upstreams should
-    still persist first.
+    values the cap drops).  When the input is NOT persisted, that one
+    job re-runs the full input lineage once — ``serial_id`` and
+    ``prefix_sum`` persist their input first.
     Bucket ids stay monotone w.r.t. the
     lexicographic (lead, second) order: within an old bucket, sub-v
     rows (< v) keep the first slot and v's sub-buckets follow.
@@ -228,7 +227,7 @@ def range_bucket_expr(df: DataFrame, sketch_expr, second_expr, n: int):
 
 
 def serial_id(df: DataFrame, key_cols: list[str], id_col: str = "id",
-              num_ranges: int | None = None, eager: bool = False,
+              num_ranges: int | None = None,
               bounded_input: bool = False) -> DataFrame:
     """Assign a dense 1-based BIGINT ``id_col`` ordered by ``key_cols``
     without a single-partition global sort.
@@ -255,11 +254,9 @@ def serial_id(df: DataFrame, key_cols: list[str], id_col: str = "id",
     (ADVICE r3): non-replicated cached blocks are still recomputed
     from lineage on executor loss, so a caller whose upstream is
     genuinely nondeterministic must checkpoint/write it out first —
-    only that guarantees id stability under failure. ``eager=True``
-    materializes the result via ``localCheckpoint`` and unpersists the
-    tagged input before returning (bounded-lifetime cache instead of
-    waiting on the ContextCleaner; the lazy default leaves the cache
-    pinned so the caller's first action reuses it).
+    only that guarantees id stability under failure.  The cache stays
+    pinned so the caller's first action reuses it; the caller's
+    ``release_persisted()`` drops it.
 
     ``bounded_input=True`` (r12, guide §5): the caller asserts the
     input is METADATA-SCALE BY CONSTRUCTION (e.g. a budget cut or a
@@ -278,10 +275,7 @@ def serial_id(df: DataFrame, key_cols: list[str], id_col: str = "id",
     """
     if bounded_input:
         w = Window.orderBy(*[F.col(c) for c in key_cols])
-        out = df.withColumn(id_col, F.row_number().over(w).cast("long"))
-        if eager:
-            out = out.localCheckpoint(eager=True)
-        return out
+        return df.withColumn(id_col, F.row_number().over(w).cast("long"))
     spark = df.sparkSession
     n = num_ranges or _default_ranges(spark)
     lead = key_cols[0]
@@ -306,8 +300,7 @@ def serial_id(df: DataFrame, key_cols: list[str], id_col: str = "id",
     # tie sub-sketches, the counts job, and the final job all read it
     # (see docstring); spill-not-evict narrows — but does not eliminate —
     # the lineage-recompute window (executor loss still recomputes).
-    # scoped (VERDICT r6 #3): eager=True still releases immediately;
-    # the lazy default is released at the caller's release_persisted()
+    # scoped (VERDICT r6 #3): released at the caller's release_persisted()
     from .cache import scoped_persist
     sk = scoped_persist(df.withColumn(_SKETCH, sketch_src))
     second = (_sortable_double(df, key_cols[1])
@@ -325,11 +318,7 @@ def serial_id(df: DataFrame, key_cols: list[str], id_col: str = "id",
         "__serial_cnt", _PID, _OFF)
 
     w = Window.partitionBy(_PID).orderBy(*keys)
-    out = (tagged.join(F.broadcast(off_df), _PID)
-           .withColumn(id_col,
-                       (F.row_number().over(w).cast("long") + F.col(_OFF)))
-           .drop(_PID, _OFF))
-    if eager:
-        out = out.localCheckpoint(eager=True)
-        sk.unpersist()
-    return out
+    return (tagged.join(F.broadcast(off_df), _PID)
+            .withColumn(id_col,
+                        (F.row_number().over(w).cast("long") + F.col(_OFF)))
+            .drop(_PID, _OFF))

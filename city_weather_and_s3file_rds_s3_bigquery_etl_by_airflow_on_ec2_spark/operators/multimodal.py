@@ -5,9 +5,8 @@ struct — the parquet-native layout that lets Catalyst prune/push down
 on metadata while the payload bytes stream through untouched. The
 decode/feature steps run as Arrow-batched ``mapInPandas`` (the real
 plumbing: schema, batch iteration, partition alignment), with the
-actual codec stubbed — the container has no image/audio libraries, so
-decode is a clearly-marked deterministic fake behind a flag (or
-``NotImplementedError`` in strict mode).
+actual codec stubbed when no image/audio library is installed: decode
+then falls to a clearly-marked deterministic fake.
 """
 
 from __future__ import annotations
@@ -157,9 +156,7 @@ def resolve_codec():
     PIL get full decode without code changes; environments without it
     still read true dimensions out of real PNG payloads. The registry
     entry stays pinned to ``codec=None`` (environment-independent
-    oracle); strict mode (`decode_and_extract(strict=True,
-    codec=None)`) still raises NotImplementedError as the marker for a
-    real ffmpeg/PIL deployment."""
+    oracle)."""
     try:
         import PIL  # noqa: F401
     except ImportError:
@@ -171,36 +168,22 @@ _AUTO = object()
 
 
 def decode_and_extract(df: DataFrame, id_col: str = "doc_id",
-                       strict: bool = False, codec=_AUTO) -> DataFrame:
+                       codec=_AUTO) -> DataFrame:
     """Decode + feature-extract over media payloads via mapInPandas.
 
     ``codec`` is a ``bytes -> (width, height)`` callable; by default it
-    resolves to the real PIL decoder when PIL is installed and to None
-    otherwise. With no codec, ``strict=True`` raises
-    NotImplementedError per batch — the marker that a real codec
-    (PIL/ffmpeg/...) belongs here — and default mode derives
-    deterministic fake width/height from the payload sha so the
-    distributed plumbing (Arrow batches, schema, partition-parallel
-    execution) is fully exercised and testable either way."""
+    resolves through :func:`resolve_codec`. With ``codec=None`` the
+    width/height are deterministic fakes derived from the payload sha,
+    so the distributed plumbing (Arrow batches, schema,
+    partition-parallel execution) is fully exercised and testable
+    either way."""
     if codec is _AUTO:
         codec = resolve_codec()
+    fn = codec if codec is not None else _stub_dims
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if codec is not None:
-                dims = pdf["media_bytes"].map(lambda b: codec(bytes(b)))
-                yield pd.DataFrame({
-                    "doc_id": pdf[id_col],
-                    "width": dims.map(lambda d: d[0]).astype("int32"),
-                    "height": dims.map(lambda d: d[1]).astype("int32"),
-                    "n_bytes": pdf["media_bytes"].map(len).astype("int64"),
-                })
-                continue
-            if strict:
-                raise NotImplementedError(
-                    "real media decode requires an image/audio codec; "
-                    "not available in this environment")
-            dims = pdf["media_bytes"].map(lambda b: _stub_dims(bytes(b)))
+            dims = pdf["media_bytes"].map(lambda b: fn(bytes(b)))
             yield pd.DataFrame({
                 "doc_id": pdf[id_col],
                 "width": dims.map(lambda d: d[0]).astype("int32"),
@@ -228,8 +211,7 @@ FRAME_SCHEMA = T.StructType([
 
 
 def resize_media(df: DataFrame, target_w: int, target_h: int,
-                 id_col: str = "doc_id", strict: bool = False,
-                 resizer=_AUTO) -> DataFrame:
+                 id_col: str = "doc_id", resizer=_AUTO) -> DataFrame:
     """Resize every media payload to (target_w, target_h) via
     Arrow-batched ``mapInPandas`` — the batch-transform shape of a
     vision-pretraining preprocessing stage.
@@ -239,8 +221,7 @@ def resize_media(df: DataFrame, target_w: int, target_h: int,
     resize+PNG-re-encode when PIL imports, else the deterministic
     stub (sha-keyed fake payload of ``target_w*target_h`` bytes) so
     the plumbing — binary in/out columns, output schema, partition
-    parallelism — is exercised without the codec. ``strict=True``
-    with no codec raises the NotImplementedError marker instead."""
+    parallelism — is exercised without the codec."""
     if resizer is _AUTO:
         resizer = _resolve_resizer(target_w, target_h)
 
@@ -249,13 +230,10 @@ def resize_media(df: DataFrame, target_w: int, target_h: int,
         reps = (target_w * target_h) // len(d) + 1
         return (d * reps)[: target_w * target_h]
 
+    fn = resizer if resizer is not None else stub
+
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if resizer is None and strict:
-                raise NotImplementedError(
-                    "real media resize requires an image codec; not "
-                    "available in this environment")
-            fn = resizer if resizer is not None else stub
             out = pdf["media_bytes"].map(lambda b: fn(bytes(b)))
             yield pd.DataFrame({
                 "doc_id": pdf[id_col],
@@ -270,7 +248,7 @@ def resize_media(df: DataFrame, target_w: int, target_h: int,
 
 def _resolve_resizer(target_w: int, target_h: int):
     """PIL resize+re-encode when importable (same tier logic as
-    resolve_codec), else None → caller falls to stub/strict."""
+    resolve_codec), else None → caller falls to the stub."""
     try:
         import io
 

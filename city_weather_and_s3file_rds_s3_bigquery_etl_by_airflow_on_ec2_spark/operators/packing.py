@@ -54,7 +54,6 @@ _OFF = "__ps_off"
 def prefix_sum(df: DataFrame, weight_col: str, order_cols: list[str],
                out_col: str = "prefix_sum",
                num_ranges: int | None = None,
-               persist_input: bool = True,
                stop_after: int | None = None,
                bounded_input: bool = False) -> DataFrame:
     """Running total of ``weight_col`` ordered by ``order_cols``
@@ -68,21 +67,16 @@ def prefix_sum(df: DataFrame, weight_col: str, order_cols: list[str],
     their running offsets are lazy subtrees of the main job since r13
     (guide §5, ``ids.exclusive_prefix_offsets``).
 
-    ``persist_input`` (default True, r6 — the corpus_loader_pipeline
-    lesson in BASELINE.md): the input is persisted MEMORY_AND_DISK so
-    the sketch, the bucket sums, and the caller's main job share ONE
-    materialization instead of each dragging the full upstream lineage
-    (a 3× tax per call when the input projects expensive expressions).
-    Correctness never depended on it (a deterministic upstream yields
-    the same sums recomputed), so ``persist_input=False`` restores the
-    zero-cache behavior for callers that manage their own persistence;
-    genuinely nondeterministic upstreams must still checkpoint first —
-    a non-replicated cache block lost to executor failure is recomputed
-    from lineage.  (r13 note: the lazy offset theta-join references the
-    bucket-sum aggregate on BOTH sides, so an UNPERSISTED expensive
-    upstream pays one extra pass vs the old eager-collect plan — all
-    in-repo callers persist, and callers opting out own that
-    trade-off too.)
+    The input is persisted MEMORY_AND_DISK (r6 — the
+    corpus_loader_pipeline lesson in BASELINE.md) so the sketch, the
+    bucket sums, and the caller's main job share ONE materialization
+    instead of each dragging the full upstream lineage (a 3× tax per
+    call when the input projects expensive expressions; the lazy offset
+    theta-join of r13 references the bucket-sum aggregate on BOTH
+    sides).  Correctness never depends on it (a deterministic upstream
+    yields the same sums recomputed); genuinely nondeterministic
+    upstreams must still checkpoint first — a non-replicated cache
+    block lost to executor failure is recomputed from lineage.
 
     ``stop_after`` (r8): when the caller only consumes rows whose
     running total BEFORE the row is < ``stop_after`` (a budget cut,
@@ -104,7 +98,7 @@ def prefix_sum(df: DataFrame, weight_col: str, order_cols: list[str],
     plain global running-total window instead (zero eager jobs, one
     bounded-size exchange, identical values by the rank contract).
     ``stop_after`` keeps its exact visible semantics via a post-window
-    cut filter; ``persist_input`` is moot (nothing re-reads the input).
+    cut filter, and nothing is persisted (nothing re-reads the input).
     Note (ADVICE r12): with ``stop_after`` the two modes return
     different ROW SETS — bounded_input applies the exact cut (drops
     every row whose prefix start is ≥ ``stop_after``) while the
@@ -126,11 +120,10 @@ def prefix_sum(df: DataFrame, weight_col: str, order_cols: list[str],
                 < F.lit(stop_after))
         return out
     spark = df.sparkSession
-    if persist_input:
-        # scoped (VERDICT r6 #3): tracked in operators/cache.py and
-        # released by the caller's post-action release_persisted()
-        from .cache import scoped_persist
-        df = scoped_persist(df)
+    # scoped (VERDICT r6 #3): tracked in operators/cache.py and
+    # released by the caller's post-action release_persisted()
+    from .cache import scoped_persist
+    df = scoped_persist(df)
     n = num_ranges or _default_ranges(spark)
     lead = order_cols[0]
     lead_type = df.schema[lead].dataType

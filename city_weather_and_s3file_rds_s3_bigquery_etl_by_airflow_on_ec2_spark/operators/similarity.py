@@ -113,32 +113,22 @@ def lsh_topk(
     )
 
 
-def _rp_plane_component(plane_family: str, plane_id: int, seed: int):
+def _rp_plane_component(plane_id: int):
     """Closure factory (NOT a default-arg lambda — the r11 HOF bug
     class, see tests/test_plan_quality.py's AST lint) producing the
     integer hyperplane component c(plane_id, d) ∈ [-1000, 1000] as a
-    one-parameter function of the dimension-index Column:
-
-    - ``"knuth"`` — the repo's standard 63-bit-safe multiplicative
-      hash over idx = plane_id·4096 + d (collision-free for d < 4096),
-      pure integer arithmetic DuckDB replays verbatim (the same
-      cross-engine family that oracle-promoted ``ann_ivf_topk``'s
-      quantizer and the split/sample operators);
-    - ``"xxhash64"`` — Spark-native whole-stage-codegen hashing, the
-      production-scale family (cheaper, not SQL-replayable).
-    """
-    if plane_family == "knuth":
-        return lambda d: (
-            ((F.lit(plane_id * 4096).cast("long") + d.cast("long"))
-             % F.lit(2147483648).cast("long"))
-            * F.lit(2654435761).cast("long")
-            % F.lit(4294967296).cast("long")
-            % F.lit(2001) - F.lit(1000))
-    if plane_family == "xxhash64":
-        return lambda d: (
-            F.pmod(F.xxhash64(F.lit(seed), F.lit(plane_id), d),
-                   F.lit(2001)) - F.lit(1000))
-    raise ValueError(f"unknown plane_family: {plane_family!r}")
+    one-parameter function of the dimension-index Column: the repo's
+    standard 63-bit-safe multiplicative ("knuth") hash over
+    idx = plane_id·4096 + d (collision-free for d < 4096), pure
+    integer arithmetic DuckDB replays verbatim (the same cross-engine
+    family that oracle-promoted ``ann_ivf_topk``'s quantizer and the
+    split/sample operators)."""
+    return lambda d: (
+        ((F.lit(plane_id * 4096).cast("long") + d.cast("long"))
+         % F.lit(2147483648).cast("long"))
+        * F.lit(2654435761).cast("long")
+        % F.lit(4294967296).cast("long")
+        % F.lit(2001) - F.lit(1000))
 
 
 def rp_buckets(
@@ -147,9 +137,7 @@ def rp_buckets(
     vec_col: str = "embedding",
     num_tables: int = 16,
     bits_per_table: int = 4,
-    plane_family: str = "knuth",
     quant_scale: int = 1000,
-    seed: int = 42,
 ) -> DataFrame:
     """Sign-random-projection LSH bucketing [Charikar 2002]: the
     narrow (id, table_id, bucket) relation the candidate join runs on.
@@ -158,7 +146,7 @@ def rp_buckets(
     integers (``floor(x·quant_scale)`` — floor, not round: round's
     half-mode differs across engines while floor of the identical
     double is identical everywhere), and the hyperplanes are integer
-    components derived from ``plane_family`` — so every sign bit is
+    components of the knuth hash family — so every sign bit is
     an INTEGER dot-product comparison, order-independent and
     bit-reproducible on any engine.  No float accumulation anywhere
     before the re-rank.  Per table t the ``bits_per_table`` sign bits
@@ -173,7 +161,7 @@ def rp_buckets(
                      lambda x: F.floor(x * quant_scale).cast("long"))
 
     def _dot_with_plane(p: int):
-        comp = _rp_plane_component(plane_family, p, seed)
+        comp = _rp_plane_component(p)
         plane = F.transform(
             F.sequence(F.lit(0), F.size("__qv") - 1), comp)
         return F.aggregate(
@@ -208,19 +196,15 @@ def rp_lsh_topk(
     vec_col: str = "embedding",
     num_tables: int = 16,
     bits_per_table: int = 4,
-    plane_family: str = "knuth",
     quant_scale: int = 1000,
-    seed: int = 42,
 ) -> DataFrame:
     """ANN top-k via sign-random-projection LSH candidates + exact
     cosine re-rank — the NATIVE sibling of :func:`lsh_topk` (which
     showcases pyspark.ml's BucketedRandomProjectionLSH), built so the
-    ENTIRE detector is engine-reproducible under the ``"knuth"`` plane
-    family (VERDICT r11 #2: the ``dedup_minhash_lsh_sqltwin`` /
-    ``ann_ivf_topk`` oracle-promotion pattern).  Same operator, two
-    plane families: ``"xxhash64"`` for production-scale hashing,
-    ``"knuth"`` for the cross-engine SQL twin; the bucketing,
-    candidate join, re-rank and top-k code paths are byte-identical.
+    ENTIRE detector is engine-reproducible: its hyperplanes come from
+    the integer "knuth" hash family DuckDB replays (VERDICT r11 #2: the
+    ``dedup_minhash_lsh_sqltwin`` / ``ann_ivf_topk`` oracle-promotion
+    pattern).
 
     Plan shape at 100 TB: corpus buckets are computed map-side
     (:func:`rp_buckets`, no shuffle), the query-side bucket relation
@@ -230,9 +214,9 @@ def rp_lsh_topk(
     side while it fits) and the final top-k is a per-query window over
     candidate rows only."""
     qb = rp_buckets(queries, query_id, vec_col, num_tables,
-                    bits_per_table, plane_family, quant_scale, seed)
+                    bits_per_table, quant_scale)
     cb = rp_buckets(corpus, corpus_id, vec_col, num_tables,
-                    bits_per_table, plane_family, quant_scale, seed)
+                    bits_per_table, quant_scale)
     cands = (cb.join(F.broadcast(qb), on=["table_id", "bucket"])
              .where(F.col(query_id) != F.col(corpus_id))
              .select(query_id, corpus_id).dropDuplicates())

@@ -122,11 +122,7 @@ def dedup_token_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact token-set Jaccard over language+length-blocked pairs —
     the deterministic ground truth for the probabilistic dedupers."""
     (documents,) = _t(spark, sf_dir, "documents")
-    return D.token_jaccard_pairs(
-        documents, "text", "doc_id",
-        block_cols=["lang"], length_col="n_chars", length_band=16,
-        min_jaccard=0.4,
-    )
+    return deterministic_jaccard_edges(documents)
 
 
 # -------------------------------------------------------------- similarity —
@@ -187,8 +183,8 @@ def ann_lsh_topk_sqltwin(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ann_ivf_topk`` promotion pattern): sign-random-projection LSH
     candidates + exact cosine re-rank + the SAME in-entry
     ``recall_at_k`` column and 0.6 ``assert_true`` floor — with every
-    stage oracle-replayable.  ``operators/similarity.rp_lsh_topk``
-    under ``plane_family="knuth"``: vectors quantize to integers
+    stage oracle-replayable.  ``operators/similarity.rp_lsh_topk``:
+    vectors quantize to integers
     (floor(x·1000) of the identical double both engines read from
     parquet), hyperplane components are integers from the repo's
     63-bit-safe Knuth multiplicative hash, so every sign bit is an
@@ -201,14 +197,12 @@ def ann_lsh_topk_sqltwin(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall-vs-brute-force arithmetic itself, bit-for-bit.  The
     pyspark.ml ``ann_lsh_topk`` entry stays the API-surface sibling
     (its JVM-internal Gaussian hyperplanes are hash-dependent by
-    design — correctly rows-only); ``plane_family="xxhash64"`` is the
-    production-scale hashing for the same operator (recall-floored in
-    tests).  Geometry (16 tables × 4 bits) measured at recall
+    design — correctly rows-only).  Geometry (16 tables × 4 bits) measured at recall
     0.87/0.83 vs exact top-5 at sf0.001/sf0.01."""
     (embeddings,) = _t(spark, sf_dir, "embeddings")
     queries = embeddings.where(F.col("vec_id") < 20) \
                         .select(F.col("vec_id").alias("q_id"), "embedding")
-    approx = S.rp_lsh_topk(queries, embeddings, k=5, plane_family="knuth")
+    approx = S.rp_lsh_topk(queries, embeddings, k=5)
     exact = S.brute_force_topk(queries, embeddings, k=5) \
              .select("q_id", "vec_id")
     n_exact = exact.groupBy("q_id").agg(F.count(F.lit(1)).alias("n_exact"))
@@ -533,10 +527,7 @@ def dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic blocked-Jaccard pairs (≥0.4), canonical min-id label
     per document. Oracle: recursive CTE reachability in DuckDB."""
     (documents,) = _t(spark, sf_dir, "documents")
-    edges = D.token_jaccard_pairs(
-        documents, "text", "doc_id",
-        block_cols=["lang"], length_col="n_chars", length_band=16,
-        min_jaccard=0.4)
+    edges = deterministic_jaccard_edges(documents)
     return D.dedup_clusters(documents.select("doc_id"), edges)
 
 
@@ -547,10 +538,7 @@ def dedup_cluster_assign_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     billion-edge path. Both implementations being oracle-exact against
     the identical recursive CTE is the equivalence proof."""
     (documents,) = _t(spark, sf_dir, "documents")
-    edges = D.token_jaccard_pairs(
-        documents, "text", "doc_id",
-        block_cols=["lang"], length_col="n_chars", length_band=16,
-        min_jaccard=0.4)
+    edges = deterministic_jaccard_edges(documents)
     return D.dedup_clusters_star(documents.select("doc_id"), edges)
 
 
@@ -1472,10 +1460,7 @@ def dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune thresholds before trusting a detector family; both inputs are
     oracle-checked entries, so the agreement rollup is too."""
     (documents,) = _t(spark, sf_dir, "documents")
-    jac = D.token_jaccard_pairs(
-        documents, "text", "doc_id",
-        block_cols=["lang"], length_col="n_chars", length_band=16,
-        min_jaccard=0.4).select("id_a", "id_b")
+    jac = deterministic_jaccard_edges(documents).select("id_a", "id_b")
     lev = fuzzy_join_levenshtein(spark, sf_dir).select("id_a", "id_b")
     j = jac.withColumn("in_jac", F.lit(1))
     l_ = lev.withColumn("in_lev", F.lit(1))
@@ -3363,11 +3348,7 @@ def corpus_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dups hit it and the worst (max) jaccard; downstream this IS
     the eval-set drop list."""
     (documents,) = _t(spark, sf_dir, "documents")
-    pairs = D.token_jaccard_pairs(
-        documents, "text", "doc_id",
-        block_cols=["lang"], length_col="n_chars", length_band=16,
-        min_jaccard=0.4,
-    )
+    pairs = deterministic_jaccard_edges(documents)
 
     def _is_val(c):
         # 63-bit-safe fold (ADVICE r7 sweep) — must stay identical to

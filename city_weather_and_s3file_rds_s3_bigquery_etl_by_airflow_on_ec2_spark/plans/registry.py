@@ -44,7 +44,13 @@ from . import relational as R
 
 _SW = "'the','a','an','and','or','of','to','in','is','it','that','for','on','with','as','at','by','this','be','are'"
 
-_TOKS = "string_split_regex(trim(text), '\\s+')"
+# The whitespace run of every oracle regex: Java's \s (the engine's
+# split/regexp_replace) includes the vertical tab \x0B, RE2's (DuckDB)
+# does not, so a bare \s would split 'a\x0Bb' differently.  Character
+# classes that hold \s spell \x0B beside it for the same reason.
+_WS = r"[\s\x0B]+"
+
+_TOKS = f"string_split_regex(trim(text), '{_WS}')"
 
 # canonical 60-bit documents row fingerprint — DuckDB twin of
 # extensions._doc_row_hash, shared by table_checksum and
@@ -55,7 +61,7 @@ _DOC_RH = (r"('0x' || substr(md5(concat_ws(chr(31),"
            r" md5(text))), 1, 15))::BIGINT")
 _STOP_RATIO = (f"(CAST(len(list_filter({_TOKS}, t -> list_contains([{_SW}], lower(t)))) AS DOUBLE)"
                f" / len({_TOKS}))")
-_PUNCT_RATIO = ("(CAST(length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)"
+_PUNCT_RATIO = ("(CAST(length(regexp_replace(text, '[A-Za-z0-9\\s\\x0B]', '', 'g')) AS DOUBLE)"
                 " / length(text))")
 
 
@@ -225,15 +231,6 @@ class QuerySpec:
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None          # ANSI SQL for DuckDB; None → rows-only
     bench: bool = False         # include in bench.py headline set
-    # Opt-out of the r8 zero-row vacuity gate (ADVICE r8): an entry
-    # whose CORRECT output is legitimately empty at the gate sf (e.g.
-    # an anomaly detector over a clean lake) sets this instead of
-    # redesigning its key; the flag obliges a planted-lake test that
-    # proves the non-empty behavior, cited in the entry's docstring.
-    # No current entry needs it — the mechanism exists so the gate
-    # can't force a threshold redesign on a future legitimately-empty
-    # entry.
-    may_be_empty: bool = False
 
 
 REGISTRY: dict[str, QuerySpec] = {
@@ -671,10 +668,10 @@ REGISTRY: dict[str, QuerySpec] = {
     ),
     "explode_variants": QuerySpec(
         R.explode_variants,
-        r"""
+        rf"""
         WITH t AS (
             SELECT doc_id,
-                   list_filter(string_split_regex(trim(text), '\s+'),
+                   list_filter(string_split_regex(trim(text), '{_WS}'),
                                x -> length(x) > 5) AS lt
             FROM documents
         )
@@ -756,8 +753,8 @@ REGISTRY: dict[str, QuerySpec] = {
     ),
     "scalar_array_funcs": QuerySpec(
         R.scalar_array_funcs,
-        r"""
-        WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
+        rf"""
+        WITH t AS (SELECT doc_id, string_split_regex(trim(text), '{_WS}') AS toks
                    FROM documents)
         SELECT doc_id,
                CAST(len(toks) AS BIGINT) AS n,
@@ -1443,7 +1440,7 @@ REGISTRY: dict[str, QuerySpec] = {
         f"""
         SELECT doc_id,
                CAST(len({_TOKS}) AS BIGINT) AS n_tokens,
-               round(CAST(length(regexp_replace(text, '\\s+', '', 'g')) AS DOUBLE)
+               round(CAST(length(regexp_replace(text, '{_WS}', '', 'g')) AS DOUBLE)
                      / len({_TOKS}), 4) AS mean_tok_len,
                round({_STOP_RATIO}, 4) AS stop_ratio
         FROM documents
@@ -1472,9 +1469,9 @@ REGISTRY: dict[str, QuerySpec] = {
     ),
     "text_fingerprint": QuerySpec(
         X.text_fingerprint,
-        """
+        f"""
         WITH n AS (
-            SELECT doc_id, regexp_replace(trim(text), '\\s+', ' ', 'g') AS norm
+            SELECT doc_id, regexp_replace(trim(text), '{_WS}', ' ', 'g') AS norm
             FROM documents
         )
         SELECT doc_id,
@@ -1507,9 +1504,9 @@ REGISTRY: dict[str, QuerySpec] = {
     ),
     "text_chunking": QuerySpec(
         X.text_chunking,
-        r"""
+        rf"""
         WITH t AS (
-            SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
+            SELECT doc_id, string_split_regex(trim(text), '{_WS}') AS toks
             FROM documents
         ), s AS (
             SELECT doc_id, toks,
@@ -1544,9 +1541,9 @@ REGISTRY: dict[str, QuerySpec] = {
     ),
     "text_contamination_check": QuerySpec(
         X.text_contamination_check,
-        r"""
+        rf"""
         WITH t AS (
-            SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
+            SELECT doc_id, string_split_regex(trim(text), '{_WS}') AS toks
             FROM documents
         ), sh AS (
             SELECT doc_id,
@@ -1681,11 +1678,11 @@ REGISTRY: dict[str, QuerySpec] = {
     ),
     "text_bpe_token_count": QuerySpec(
         X.text_bpe_token_count,
-        r"""
+        rf"""
         SELECT doc_id,
-               CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))
+               CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s\x0B]'))
                     AS BIGINT) AS n_bpeish,
-               CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT)
+               CAST(len(string_split_regex(trim(text), '{_WS}')) AS BIGINT)
                    AS n_ws_tokens
         FROM documents
         """,
@@ -1918,7 +1915,7 @@ REGISTRY: dict[str, QuerySpec] = {
         WITH m AS (
             SELECT doc_id,
                    CAST(len({_TOKS}) AS BIGINT) AS n_words,
-                   round(CAST(length(regexp_replace(text, '\\s+', '', 'g'))
+                   round(CAST(length(regexp_replace(text, '{_WS}', '', 'g'))
                               AS DOUBLE) / len({_TOKS}), 4) AS mean_word_len,
                    round({_PUNCT_RATIO}, 4) AS symbol_ratio,
                    CAST(len(list_filter({_TOKS},
@@ -2230,11 +2227,11 @@ REGISTRY: dict[str, QuerySpec] = {
             FROM kept GROUP BY doc_id
         ), sized AS (
             SELECT doc_id,
-                   len(string_split_regex(trim(clean_text), '\\s+'))
+                   len(string_split_regex(trim(clean_text), '{_WS}'))
                        AS n_tokens
             FROM cleaned
             WHERE n_spans_kept >= 2
-              AND len(string_split_regex(trim(clean_text), '\\s+')) >= 20
+              AND len(string_split_regex(trim(clean_text), '{_WS}')) >= 20
         ), run AS (
             SELECT doc_id, n_tokens,
                    sum(n_tokens) OVER (ORDER BY doc_id) AS ps
@@ -3404,11 +3401,11 @@ REGISTRY: dict[str, QuerySpec] = {
     ),
     "text_sentence_split": QuerySpec(
         X.text_sentence_split,
-        r"""
+        rf"""
         WITH s AS (
             SELECT doc_id,
                    list_filter(list_transform(
-                       string_split_regex(text, '[.!?]+\s*'), x -> trim(x)),
+                       string_split_regex(text, '[.!?]+[\s\x0B]*'), x -> trim(x)),
                        x -> x <> '') AS sents
             FROM documents
         )
@@ -3416,7 +3413,7 @@ REGISTRY: dict[str, QuerySpec] = {
                CAST(generate_subscripts(sents, 1) - 1 AS INT)
                    AS sentence_idx,
                unnest(sents) AS sentence,
-               CAST(len(string_split_regex(unnest(sents), '\s+'))
+               CAST(len(string_split_regex(unnest(sents), '{_WS}'))
                     AS BIGINT) AS n_sent_tokens
         FROM s
         """,
@@ -4371,13 +4368,13 @@ REGISTRY: dict[str, QuerySpec] = {
     ),
     "text_trigram_langid": QuerySpec(
         X.text_trigram_langid,
-        r"""
+        rf"""
         WITH d AS (
             SELECT doc_id, lang AS true_lang,
-                   lower(regexp_replace(trim(text), '\s+', ' ', 'g'))
+                   lower(regexp_replace(trim(text), '{_WS}', ' ', 'g'))
                        AS nt
             FROM documents
-            WHERE length(lower(regexp_replace(trim(text), '\s+', ' ',
+            WHERE length(lower(regexp_replace(trim(text), '{_WS}', ' ',
                                               'g'))) >= 3
         ), tri AS (
             SELECT doc_id, true_lang, substr(nt, i, 3) AS tri
@@ -4964,7 +4961,7 @@ REGISTRY: dict[str, QuerySpec] = {
                    list_distinct(list_transform({_TOKS},
                                                 t -> lower(t))) AS feats,
                    CAST(len({_TOKS}) AS BIGINT) AS n_words,
-                   round(CAST(length(regexp_replace(text, '\\s+', '', 'g'))
+                   round(CAST(length(regexp_replace(text, '{_WS}', '', 'g'))
                               AS DOUBLE) / len({_TOKS}), 4) AS mean_word_len,
                    round({_PUNCT_RATIO}, 4) AS symbol_ratio,
                    CAST(len(list_filter({_TOKS},
@@ -5186,10 +5183,10 @@ REGISTRY: dict[str, QuerySpec] = {
     ),
     "corpus_cross_source_overlap": QuerySpec(
         X.corpus_cross_source_overlap,
-        """
+        f"""
         WITH census AS (
             SELECT md5(array_to_string(list_slice(
-                       string_split_regex(trim(lower(text)), '\\s+'),
+                       string_split_regex(trim(lower(text)), '{_WS}'),
                        1, 12), ' ')) AS h,
                    source, CAST(count(*) AS BIGINT) AS n_docs
             FROM documents GROUP BY 1, 2
@@ -5210,7 +5207,7 @@ REGISTRY: dict[str, QuerySpec] = {
                    CAST(octet_length(encode(text)) AS BIGINT) AS nb,
                    CAST(len({_TOKS}) AS BIGINT) AS nw,
                    CAST(len(regexp_extract_all(
-                        text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))
+                        text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s\x0B]'))
                         AS BIGINT) AS ns
             FROM documents
         )
@@ -5331,17 +5328,17 @@ REGISTRY: dict[str, QuerySpec] = {
         WITH s AS (
             SELECT doc_id, lang AS doc_lang,
                    unnest(list_filter(list_transform(
-                       string_split_regex(text, '[.!?]+\s*'),
+                       string_split_regex(text, '[.!?]+[\s\x0B]*'),
                        x -> trim(x)), x -> x <> '')) AS sentence
             FROM documents
         ), cls AS (
             SELECT doc_id, doc_lang,
                    CASE WHEN
                        (CAST(len(list_filter(
-                            string_split_regex(trim(sentence), '\s+'),
+                            string_split_regex(trim(sentence), '{_WS}'),
                             t -> list_contains([{_SW}], lower(t))))
                              AS DOUBLE)
-                        / len(string_split_regex(trim(sentence), '\s+')))
+                        / len(string_split_regex(trim(sentence), '{_WS}')))
                        >= 0.08
                    THEN 1 ELSE 0 END AS is_en
             FROM s
@@ -5363,9 +5360,9 @@ REGISTRY: dict[str, QuerySpec] = {
         f"""
         WITH m AS (
             SELECT (len({_TOKS}) >= 20 AND len({_TOKS}) <= 100000) AS p_wc,
-                   (round(CAST(length(regexp_replace(text, '\\s+', '', 'g'))
+                   (round(CAST(length(regexp_replace(text, '{_WS}', '', 'g'))
                                AS DOUBLE) / len({_TOKS}), 4) >= 3.0
-                    AND round(CAST(length(regexp_replace(text, '\\s+', '',
+                    AND round(CAST(length(regexp_replace(text, '{_WS}', '',
                                                          'g'))
                                    AS DOUBLE) / len({_TOKS}), 4) <= 10.0)
                        AS p_mwl,

@@ -8,6 +8,7 @@ from pathlib import Path
 from urllib.parse import parse_qs, urlsplit
 
 import pytest
+from py4j.protocol import Py4JError
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
@@ -45,6 +46,32 @@ def host_sized_heap(meminfo: str = "/proc/meminfo") -> str | None:
 _HEAP = host_sized_heap()
 if _HEAP is not None:
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", _HEAP)
+
+
+def dead_jvm_message(gateway) -> str | None:
+    """None while the py4j ``gateway``'s JVM answers, else one message
+    that names the likely cause (a JVM the kernel's OOM killer ended
+    fails every later Spark test with a py4j connection error)."""
+    try:
+        gateway.jvm.java.lang.System.nanoTime()
+        return None
+    except (Py4JError, OSError) as e:
+        code = gateway.proc.poll() if getattr(gateway, "proc", None) else None
+        return (f"Spark JVM is dead ({type(e).__name__}, exit code {code}): "
+                "most likely the kernel's OOM killer ended it (see dmesg) "
+                "at SPARK_GRAFT_DRIVER_MEM="
+                f"{os.environ.get('SPARK_GRAFT_DRIVER_MEM')}; stopping here")
+
+
+def pytest_runtest_setup(item):
+    """Stop the suite at the first Spark test after the JVM died."""
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    if "spark" in item.fixturenames and sc is not None:
+        msg = dead_jvm_message(sc._gateway)
+        if msg is not None:
+            pytest.exit(msg, returncode=1)
 
 
 @pytest.fixture(scope="session")

@@ -1,7 +1,8 @@
 """Session sizing: with ``SPARK_GRAFT_CPUS`` unset, ``get_spark`` sizes
 the local master and the shuffle partitions from the CPUs the process
 may run on, not from a constant written for one machine; the test
-suite sizes its JVM heap from the host's memory."""
+suite sizes its JVM heap from the host's memory and stops at once when
+the JVM dies."""
 
 from __future__ import annotations
 
@@ -60,3 +61,23 @@ def test_test_heap_follows_host_memory(tmp_path):
     assert heap(2 * 1024 ** 2) == "2g"
     assert heap(None) is None
     assert host_sized_heap(str(tmp_path / "absent")) is None
+
+
+
+def test_dead_jvm_is_named_once():
+    """The suite's fail-fast check passes a live gateway and names the
+    likely OOM kill for one that refuses connections."""
+    from .conftest import dead_jvm_message
+
+    def gateway(ping, code):
+        return SimpleNamespace(proc=SimpleNamespace(poll=lambda: code),
+                               jvm=SimpleNamespace(java=SimpleNamespace(
+                                   lang=SimpleNamespace(System=SimpleNamespace(
+                                       nanoTime=ping)))))
+
+    def refuse():
+        raise ConnectionRefusedError(111, "Connection refused")
+
+    assert dead_jvm_message(gateway(lambda: 1, None)) is None
+    msg = dead_jvm_message(gateway(refuse, -9))
+    assert "exit code -9" in msg and "OOM" in msg

@@ -86,7 +86,7 @@ from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.plans.r
 from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.sources.tables import (  # noqa: E402
     TPCH_TABLES,
 )
-from check_correctness import may_be_empty, normalize  # noqa: E402
+from check_correctness import normalize  # noqa: E402
 
 
 WINDOW_SIZE = 50
@@ -233,13 +233,12 @@ def main() -> int:
             print(f"FAIL  {name}: spark error: {e}")
             failures.append(name)
             continue
-        if len(spark_rows) == 0 and not may_be_empty(name):
+        if len(spark_rows) == 0:
             # vacuity rule (r8, same as check_correctness.py): a window
             # slot spent on a 0-row result proves nothing — the hash of
             # an empty set is trivially green (this tool blessed
             # corpus_cross_source_overlap's empty result before the
-            # rule existed).  QuerySpec.may_be_empty opts a
-            # legitimately-empty-at-sf entry out (ADVICE r8).
+            # rule existed).
             print(f"FAIL  {name}: 0 rows at this sf — vacuous window "
                   "entry")
             failures.append(name)

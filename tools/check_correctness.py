@@ -26,23 +26,9 @@ from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.operato
     cached_plan_count,
     release_persisted,
 )
-from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.plans.registry import (  # noqa: E402
-    REGISTRY,
-)
 from city_weather_and_s3file_rds_s3_bigquery_etl_by_airflow_on_ec2_spark.sources.tables import (  # noqa: E402
     TPCH_TABLES,
 )
-
-
-def may_be_empty(name: str) -> bool:
-    """Per-entry opt-out of the zero-row vacuity gate (ADVICE r8): a
-    registry entry whose correct output is legitimately empty at the
-    gate sf sets ``QuerySpec.may_be_empty=True`` (and must carry a
-    planted-lake test) instead of being forced into a key/threshold
-    redesign.  Entries outside the registry (none today) default to
-    the strict gate."""
-    spec = REGISTRY.get(name)
-    return bool(spec is not None and spec.may_be_empty)
 
 
 # DuckDB output types that drift through a pandas ``.df()`` bridge —
@@ -128,7 +114,7 @@ def main() -> int:
                             "oracle_rows": None, "err": f"spark error: {e}"}
             continue
         if name not in oracles:
-            if len(spark_rows) == 0 and not may_be_empty(name):
+            if len(spark_rows) == 0:
                 # same vacuity rule as the oracle path (r8): a
                 # rows-only entry whose registry run returns nothing
                 # exercises nothing at this sf
@@ -186,8 +172,7 @@ def main() -> int:
         # Every oracle-checked entry must produce at least one row at
         # the gate's sf; make the key/threshold meaningful at small sf
         # or convert the entry to rows-only with a planted-lake test.
-        if (len(spark_rows) == 0 and len(duck_rows) == 0
-                and not may_be_empty(name)):
+        if len(spark_rows) == 0 and len(duck_rows) == 0:
             problems.append(
                 "vacuous oracle: 0 rows on both engines at this sf — "
                 "the value comparison proves nothing")
